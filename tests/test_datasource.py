@@ -36,6 +36,9 @@ def fixture_dir(tmp_path_factory):
             for i in range(n)
         ]
         (base / f"{ticker}.json").write_text(json.dumps(rows))
+    # E1 bodies: an in-body error sentinel and a null payload
+    (base / "GHOST.json").write_text(json.dumps("Ticker Not Found."))
+    (base / "EMPTY.json").write_text("null")
     return str(base)
 
 
@@ -85,3 +88,20 @@ def test_datasource_feeds_transform_layer(registered, fixture_dir):
     assert len(rows) == 5
     assert rows[0]["stock_key"] == "2024-01-01/MSFT"
     assert rows[0]["stock_close"] == 10.5
+
+
+def test_datasource_applies_payload_checks(registered, fixture_dir):
+    """The executor path runs the same E1 checks as ``fetch_stock``: a
+    sentinel body fails the read, a null body yields no rows."""
+
+    def read(ticker):
+        return (
+            registered.read.format("stock_api")
+            .option("tickers", ticker)
+            .option("fixture_dir", fixture_dir)
+            .load()
+        )
+
+    with pytest.raises(Exception, match="Ticker Not Found"):
+        read("GHOST").collect()
+    assert read("EMPTY").count() == 0

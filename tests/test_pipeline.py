@@ -67,7 +67,7 @@ def fixture_fetcher(kind: str, entity: str, from_date: str) -> list[dict]:
 
 def test_scd0_idempotent_and_unique(spark, tmp_path):
     target = str(tmp_path / "fact")
-    raw = fetch_stock(spark, fixture_fetcher, "AAA", SENTINEL_DATE)
+    raw = fetch_stock(spark, fixture_fetcher, {"AAA": SENTINEL_DATE})
     batch = normalize_stock_payload(raw, "AAA")
 
     n1 = merge_append(batch, target, "stock_key")
@@ -90,7 +90,7 @@ def test_scd0_corrupt_target_raises_not_first_load(spark, tmp_path):
     target.mkdir()
     (target / "part-00000.parquet").write_bytes(b"this is not parquet")
 
-    raw = fetch_stock(spark, fixture_fetcher, "AAA", SENTINEL_DATE)
+    raw = fetch_stock(spark, fixture_fetcher, {"AAA": SENTINEL_DATE})
     batch = normalize_stock_payload(raw, "AAA")
     with pytest.raises(Exception):
         merge_append(batch, str(target), "stock_key")
@@ -103,7 +103,7 @@ def test_scd0_empty_dir_is_first_load(spark, tmp_path):
     UNABLE_TO_INFER_SCHEMA case), not an error."""
     target = tmp_path / "fact"
     target.mkdir()
-    raw = fetch_stock(spark, fixture_fetcher, "AAA", SENTINEL_DATE)
+    raw = fetch_stock(spark, fixture_fetcher, {"AAA": SENTINEL_DATE})
     batch = normalize_stock_payload(raw, "AAA")
     assert merge_append(batch, str(target), "stock_key") == 10
 
@@ -117,10 +117,11 @@ def test_incremental_boundary_fetches_exactly_missing_days(spark, tmp_path):
     merge_append(first, target, "stock_key")
 
     sink = spark.read.parquet(target)
-    frm = next_from_date(sink, "AAA")
-    assert frm == "2024-01-06"
+    # unknown entity → sentinel → full fetch
+    frm = next_from_date(sink, ["AAA", "ZZZ"])
+    assert frm == {"AAA": "2024-01-06", "ZZZ": SENTINEL_DATE}
 
-    raw = fetch_stock(spark, fixture_fetcher, "AAA", frm)
+    raw = fetch_stock(spark, fixture_fetcher, {"AAA": frm["AAA"]})
     incr = normalize_stock_payload(raw, "AAA")
     got_dates = sorted(r["stock_date"].isoformat() for r in incr.collect())
     assert got_dates == [f"2024-01-{d:02d}" for d in range(6, 11)]
@@ -128,8 +129,24 @@ def test_incremental_boundary_fetches_exactly_missing_days(spark, tmp_path):
     assert merge_append(incr, target, "stock_key") == 5
     assert spark.read.parquet(target).count() == 10
 
-    # unknown entity → sentinel → full fetch
-    assert next_from_date(sink, "ZZZ") == SENTINEL_DATE
+
+def test_next_from_date_jobs_do_not_grow_with_tickers(spark):
+    """All tickers' bounds come from one aggregate: 20 tickers start as
+    many Spark jobs as one."""
+    tickers = [f"T{i:02d}" for i in range(20)]
+    sink = spark.createDataFrame(
+        [(t, dt.date(2024, 1, d)) for t in tickers for d in (1, 2, 3)],
+        "stock_ticker string, stock_date date",
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(ts):
+        before = dag.nextJobId()
+        frm = next_from_date(sink, ts)
+        assert frm == {t: "2024-01-04" for t in ts}
+        return dag.nextJobId() - before
+
+    assert jobs(tickers[:1]) == jobs(tickers) > 0
 
 
 def test_schema_drift_payload_with_and_without_optional_fields(spark):
@@ -176,7 +193,7 @@ def test_surrogate_key_parity_golden(spark):
 def test_market_snapshot_filters_type_and_scd0(spark, tmp_path):
     """P7 filter (common stock only) + J1 anti-join on the dimension."""
     target = str(tmp_path / "dim")
-    raw = fetch_market(spark, fixture_fetcher, "NYSE")
+    raw = fetch_market(spark, fixture_fetcher, ["NYSE"])
     dim = normalize_market_payload(raw)
     rows = dim.collect()
     assert [r["market_stockid"] for r in rows] == ["AAA"]  # ETF filtered out

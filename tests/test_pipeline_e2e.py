@@ -90,6 +90,56 @@ def test_two_cycle_incremental_pipeline(spark, dbs, tmp_path):
     assert r["market_exchange"] == "NYSE"
 
 
+def test_new_ticker_joins_incremental_cycle(spark, dbs, tmp_path):
+    """One cycle with mixed lags: a new ticker pulls its full history
+    from the sentinel while the loaded ones pull only the delta."""
+    from utn_dataengineering_stockmarketpipeline_spark.sources.state import (
+        SENTINEL_DATE,
+    )
+
+    stage, dw = dbs
+    lake_dir = str(tmp_path / "bronze")
+    pipeline.run_pipeline(
+        spark, make_fetcher("2024-01-10"), ["AAA", "BBB"], ["NYSE"],
+        lake_dir, stage, dw,
+    )
+
+    fetch, asked = make_fetcher("2024-01-15"), {}
+
+    def recording(kind, entity, from_date):
+        if kind == "stock":
+            asked[entity] = from_date
+        return fetch(kind, entity, from_date)
+
+    r = pipeline.run_pipeline(
+        spark, recording, ["AAA", "BBB", "CCC"], ["NYSE"], lake_dir, stage, dw,
+    )
+    assert asked == {
+        "AAA": "2024-01-11", "BBB": "2024-01-11", "CCC": SENTINEL_DATE,
+    }
+    assert r.fetched["stock_prices"] == 5 + 5 + 15
+    assert r.committed["stock_prices"] == 25
+
+    fact = spark.table(f"{dw}.stock_prices")
+    per_ticker = {
+        row["stock_ticker"]: row["count"]
+        for row in fact.groupBy("stock_ticker").count().collect()
+    }
+    assert per_ticker == {"AAA": 15, "BBB": 15, "CCC": 15}
+    assert fact.select("stock_key").distinct().count() == 45
+
+
+def test_empty_inputs_commit_nothing(spark, dbs, tmp_path):
+    stage, dw = dbs
+    r = pipeline.run_pipeline(
+        spark, make_fetcher("2024-01-10"), [], [], str(tmp_path / "bronze"),
+        stage, dw,
+    )
+    for table in ("markets", "stock_prices"):
+        assert r.fetched[table] == r.staged[table] == r.committed[table] == 0
+    assert spark.table(f"{dw}.stock_prices").count() == 0
+
+
 def test_corpus_release_end_to_end(spark, tmp_path):
     """The LLM-corpus release flow, end to end on real files: curated
     catalog query -> seeded-shuffle shard export -> atomic snapshot

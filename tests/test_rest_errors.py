@@ -1,5 +1,5 @@
-"""REST source error discrimination (E1) and the distributed
-``fetch_many`` fan-out (S1 scale path)."""
+"""REST source error discrimination (E1) and the ticker-tagged batch
+``fetch_stock`` returns."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import pytest
 
 from utn_dataengineering_stockmarketpipeline_spark.sources.rest import (
     ApiError,
-    fetch_many,
     fetch_stock,
 )
 
@@ -27,32 +26,21 @@ def error_fetcher(kind, entity, from_date):
 
 def test_api_error_sentinels_raise(spark):
     with pytest.raises(ApiError, match="Ticker Not Found"):
-        fetch_stock(spark, error_fetcher, "GHOST", "1990-01-01")
+        fetch_stock(spark, error_fetcher, {"GHOST": "1990-01-01"})
     with pytest.raises(ApiError, match="Exchange Not Found"):
-        fetch_stock(spark, error_fetcher, "NOX", "1990-01-01")
+        fetch_stock(spark, error_fetcher, {"NOX": "1990-01-01"})
 
 
 def test_null_payload_is_empty_not_error(spark):
-    df = fetch_stock(spark, error_fetcher, "EMPTY", "1990-01-01")
+    df = fetch_stock(spark, error_fetcher, {"EMPTY": "1990-01-01"})
     assert df.count() == 0
-    assert "close" in df.columns  # schema intact for downstream union
+    assert "close" in df.columns  # schema intact for normalize
 
 
-def test_fetch_many_distributes_and_tags(spark):
-    """mapInPandas fan-out: every ticker's rows arrive tagged; the
-    fetcher runs on executors. Defined as a closure so cloudpickle
-    ships it BY VALUE — a test-module-level function would need the
-    test file importable on executors."""
-
-    def exec_fetcher(kind, entity, from_date):
-        return [
-            {"date": "2024-01-01", "open": 1.0, "high": 2.0, "low": 0.5,
-             "close": 1.5, "adjusted_close": 1.4, "volume": 10}
-        ]
-
-    work = [("AAA", "1990-01-01"), ("BBB", "1990-01-01"), ("CCC", "1990-01-01")]
-    df = fetch_many(spark, exec_fetcher, work)
-    rows = df.collect()
-    assert sorted({r["ticker"] for r in rows}) == ["AAA", "BBB", "CCC"]
+def test_fetch_stock_tags_every_ticker(spark):
+    """One batch for many tickers: every row arrives tagged with the
+    ticker it was fetched for."""
+    work = {"AAA": "1990-01-01", "BBB": "1990-01-01", "CCC": "1990-01-01"}
+    rows = fetch_stock(spark, error_fetcher, work).collect()
+    assert sorted(r["ticker"] for r in rows) == ["AAA", "BBB", "CCC"]
     assert all(r["close"] == 1.5 for r in rows)
-    assert len(rows) == 3

@@ -32,8 +32,8 @@ def normalize_stock_payload(raw: DataFrame, ticker: str | Column) -> DataFrame:
     P5 (drift drops, :164-167), P6 (renames, :169-182) as one projection.
 
     ``ticker`` may be a literal (single-ticker fetch, the reference's
-    shape) or a Column (distributed fan-out where the ticker tag rides
-    along with each row).
+    shape) or a Column (a multi-ticker batch where the ticker tag rides
+    along with each row, as ``rest.fetch_stock`` returns it).
     """
     t = F.lit(ticker) if isinstance(ticker, str) else ticker
     raw = _maybe_drop(raw, "adjusted_close", "warning")

@@ -6,6 +6,9 @@ dimension; for each ticker, incremental EOD pull from the saved state →
 bronze parquet → stage → SCD-0 warehouse commit; then the
 ``get_last_price`` query. Spark-native differences:
 
+- each cycle is one batch, not a loop over tickers: one watermark
+  aggregate gives every ticker's ``from`` bound, one ``ticker``-tagged
+  frame holds all fetched rows, and one projection normalizes them;
 - the incremental bound derives from the warehouse itself
   (sources/state.py) — no ``state.json``;
 - the bronze lake partitions by year/month (not day/ticker, §4.1);
@@ -22,12 +25,13 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .operators import warehouse as wh
 from .operators.transforms import normalize_market_payload, normalize_stock_payload
 from .sources import lake
 from .sources.rest import Fetcher, fetch_market, fetch_stock
-from .sources.state import SENTINEL_DATE, next_from_date
+from .sources.state import next_from_date
 
 
 @dataclass
@@ -56,31 +60,18 @@ def run_pipeline(
     report = PipelineReport()
     wh.create_tables(spark, stage, warehouse)
 
-    # --- dimension: full snapshot per exchange (T4, main.py:22-23) ---
-    markets_batches = [
-        normalize_market_payload(fetch_market(spark, fetcher, ex))
-        for ex in exchanges
-    ]
-    dim = markets_batches[0]
-    for extra in markets_batches[1:]:
-        dim = dim.unionByName(extra)
+    # --- dimension: full snapshot of every exchange (T4, main.py:22-23) ---
+    dim = normalize_market_payload(fetch_market(spark, fetcher, exchanges))
     report.fetched["markets"] = dim.count()
     report.staged["markets"] = wh.save_to_stage(spark, "markets", dim, stage)
     report.committed["markets"] = wh.commit_to_warehouse(
         spark, "markets", stage, warehouse
     )
 
-    # --- fact: incremental per ticker (T1, main.py:14-16) ---
+    # --- fact: incremental, all tickers in one batch (T1, main.py:14-16) ---
     fact_table = spark.table(f"`{warehouse}`.`stock_prices`")
-    batches: list[DataFrame] = []
-    for ticker in tickers:
-        frm = next_from_date(fact_table, ticker)
-        raw = fetch_stock(spark, fetcher, ticker, frm)
-        batches.append(normalize_stock_payload(raw, ticker))
-    incoming = batches[0]
-    for extra in batches[1:]:
-        incoming = incoming.unionByName(extra)
-    incoming = incoming.persist()
+    raw = fetch_stock(spark, fetcher, next_from_date(fact_table, tickers))
+    incoming = normalize_stock_payload(raw, F.col("ticker")).persist()
     try:
         report.fetched["stock_prices"] = incoming.count()
         if report.fetched["stock_prices"]:
@@ -101,8 +92,6 @@ def get_last_price(
 ) -> DataFrame:
     """The reference's analytical query over the live warehouse
     (``DB_manager.py:181-199``), global-max-date quirk included."""
-    from pyspark.sql import functions as F
-
     from .functions.scalar import fmt_ddmmyyyy
 
     fact = spark.table(f"`{warehouse}`.`stock_prices`")

@@ -63,6 +63,11 @@ STOCK_RAW = T.StructType(
     ]
 )
 
+# One multi-ticker fetch batch: each eod row tagged with its ticker.
+STOCK_RAW_TAGGED = T.StructType(
+    [T.StructField("ticker", T.StringType()), *STOCK_RAW.fields]
+)
+
 # exchange-symbol-list/{EXCHANGE} JSON rows (API_manager.py:185-197).
 MARKET_RAW = T.StructType(
     [

@@ -13,7 +13,10 @@ Fetch modes (options):
 - ``fixture_dir``: read ``{dir}/{ticker}.json`` — hermetic tests, no
   network (the pluggable-fetcher design of sources/rest.py).
 - ``base_url`` + ``api_token``: real HTTP GET
-  ``eod/{ticker}.US?from=...&fmt=json`` (API_manager.py:51-59,125).
+  ``eod/{ticker}.US?from=...&fmt=json`` through ``rest.http_fetcher``
+  (API_manager.py:51-59,125).
+
+Either way the payload passes the E1 checks of ``rest._check_payload``.
 
 Options are plain strings (the DataSource contract), so everything the
 executor needs travels in them — never a pickled closure.
@@ -25,20 +28,24 @@ import json
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.types import StructType
 
-_FIELDS = (
-    ("ticker", "string"),
-    ("date", "string"),
-    ("open", "double"),
-    ("high", "double"),
-    ("low", "double"),
-    ("close", "double"),
-    ("adjusted_close", "double"),
-    ("volume", "bigint"),
-    ("warning", "string"),
-)
-_SCHEMA = ", ".join(f"{n} {t}" for n, t in _FIELDS)
-_PAYLOAD_COLS = [n for n, _ in _FIELDS[1:]]
+from ..schemas import STOCK_RAW, STOCK_RAW_TAGGED
+from .rest import Fetcher, _check_payload, http_fetcher
+
+
+def _fixture_fetcher(fixture_dir: str) -> Fetcher:
+    """Serve ``{dir}/{ticker}.json`` bodies, applying the API's ``from``
+    bound to row payloads; sentinel and null bodies pass through as-is."""
+
+    def fetch(kind: str, entity: str, from_date: str):
+        with open(f"{fixture_dir}/{entity}.json") as fh:
+            payload = json.load(fh)
+        if isinstance(payload, list):
+            payload = [r for r in payload if r.get("date", "") >= from_date]
+        return payload
+
+    return fetch
 
 
 class _TickerPartition(InputPartition):
@@ -61,29 +68,20 @@ class StockApiReader(DataSourceReader):
         return [_TickerPartition(t, self.from_date) for t in self.tickers]
 
     def read(self, partition: _TickerPartition) -> Iterator[tuple]:
-        rows = self._fetch(partition.ticker, partition.from_date)
-        for r in rows:
-            yield (partition.ticker, *[r.get(c) for c in _PAYLOAD_COLS])
+        names = STOCK_RAW.fieldNames()
+        for r in self._fetch(partition.ticker, partition.from_date):
+            yield (partition.ticker, *[r.get(c) for c in names])
 
     def _fetch(self, ticker: str, from_date: str) -> list[dict]:
         fixture_dir = self.options.get("fixture_dir")
-        if fixture_dir:
-            with open(f"{fixture_dir}/{ticker}.json") as fh:
-                rows = json.load(fh)
-            return [r for r in rows if r.get("date", "") >= from_date]
         base = self.options.get("base_url")
-        token = self.options.get("api_token", "")
-        if not base:
+        if fixture_dir:
+            fetcher = _fixture_fetcher(fixture_dir)
+        elif base:
+            fetcher = http_fetcher(base, self.options.get("api_token", ""))
+        else:
             raise ValueError("stock_api needs 'fixture_dir' or 'base_url'")
-        import urllib.parse
-        import urllib.request
-
-        params = urllib.parse.urlencode(
-            {"from": from_date, "api_token": token, "fmt": "json"}
-        )
-        url = f"{base}/eod/{ticker}.US?{params}"
-        with urllib.request.urlopen(url, timeout=60) as resp:  # noqa: S310
-            return json.loads(resp.read())
+        return _check_payload(fetcher("stock", ticker, from_date))
 
 
 class StockApiDataSource(DataSource):
@@ -94,8 +92,8 @@ class StockApiDataSource(DataSource):
     def name(cls) -> str:
         return "stock_api"
 
-    def schema(self) -> str:
-        return _SCHEMA
+    def schema(self) -> StructType:
+        return STOCK_RAW_TAGGED
 
     def reader(self, schema) -> StockApiReader:
         return StockApiReader(self.options)

@@ -2,28 +2,25 @@
 
 The reference fetches EODHD endpoints with blocking ``requests`` calls in
 a single process (``API_manager.py:51-65,119-140``). Here the fetch is a
-pluggable callable so tests inject local JSON fixtures (no network), and
-production can fan out across executors.
+pluggable callable so tests inject local JSON fixtures (no network).
 
-Scale design: one HTTP endpoint is inherently driver-side, but a ticker
-*universe* is not — ``fetch_many`` distributes tickers to executors with
-``mapInPandas`` so a 10k-ticker backfill runs at cluster width rather
-than sequentially like the reference (``main.py:65-75``). Each executor
-task fetches its partition's tickers and yields typed rows; the result is
-a normal DataFrame feeding the transform layer.
+One ETL cycle is one batch: ``fetch_stock`` calls the fetcher once per
+ticker on the driver, validates every payload, and returns a single
+frame tagged with ``ticker``; ``fetch_market`` does the same for all
+exchanges. Executor fan-out for large ticker universes is the Spark 4
+DataSource in ``sources/datasource.py``.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterable
 from typing import Any
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..schemas import MARKET_RAW, STOCK_RAW
+from ..schemas import MARKET_RAW, STOCK_RAW_TAGGED
 
 # fetcher(kind, entity, from_date) -> list of JSON row dicts.
 Fetcher = Callable[[str, str, str], list[dict[str, Any]]]
@@ -85,55 +82,29 @@ def json_rows_to_df(
 
 
 def fetch_stock(
-    spark: SparkSession, fetcher: Fetcher, ticker: str, from_date: str
+    spark: SparkSession, fetcher: Fetcher, from_dates: dict[str, str]
 ) -> DataFrame:
-    """S1: incremental EOD prices for one ticker (raw payload shape).
+    """S1: incremental EOD prices for every ticker in ``from_dates``
+    (ticker -> ``from`` bound), as one ``ticker``-tagged raw frame.
 
     Payload validation (E1 sentinels, null→empty) happens HERE, not in
     the fetcher, so every fetcher implementation gets it.
     """
-    rows = _check_payload(fetcher("stock", ticker, from_date))
-    return json_rows_to_df(spark, rows, STOCK_RAW)
+    rows = [
+        {**r, "ticker": ticker}
+        for ticker, from_date in from_dates.items()
+        for r in _check_payload(fetcher("stock", ticker, from_date))
+    ]
+    return json_rows_to_df(spark, rows, STOCK_RAW_TAGGED)
 
 
-def fetch_market(spark: SparkSession, fetcher: Fetcher, exchange: str) -> DataFrame:
-    """S2: full symbol-list snapshot for one exchange (raw payload shape)."""
-    rows = _check_payload(fetcher("market", exchange, "1990-01-01"))
-    return json_rows_to_df(spark, rows, MARKET_RAW)
-
-
-def fetch_many(
-    spark: SparkSession,
-    fetcher: Fetcher,
-    tickers_with_from: list[tuple[str, str]],
-    parallelism: int | None = None,
+def fetch_market(
+    spark: SparkSession, fetcher: Fetcher, exchanges: list[str]
 ) -> DataFrame:
-    """Distributed fan-out: fetch many tickers across executors.
-
-    The reference loops tickers sequentially on one machine
-    (main.py:65-75). Here the (ticker, from_date) work-list becomes a
-    DataFrame repartitioned to cluster width; each task fetches its
-    tickers and yields raw rows tagged with the ticker. The fetcher must
-    be picklable (http_fetcher's closure is).
-    """
-    out_schema = T.StructType(
-        [T.StructField("ticker", T.StringType()), *STOCK_RAW.fields]
-    )
-    work = spark.createDataFrame(tickers_with_from, "ticker string, from_date string")
-    n = parallelism or min(len(tickers_with_from), 64)
-    names = [f.name for f in STOCK_RAW.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for ticker, from_date in zip(pdf["ticker"], pdf["from_date"]):
-                rows = _check_payload(fetcher("stock", ticker, from_date))
-                frame = pd.DataFrame(
-                    [[r.get(c) for c in names] for r in rows], columns=names
-                )
-                frame.insert(0, "ticker", ticker)
-                frames.append(frame)
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    return work.repartition(n, "ticker").mapInPandas(run, schema=out_schema)
+    """S2: full symbol-list snapshot of every exchange, as one raw frame."""
+    rows = [
+        r
+        for exchange in exchanges
+        for r in _check_payload(fetcher("market", exchange, "1990-01-01"))
+    ]
+    return json_rows_to_df(spark, rows, MARKET_RAW)

@@ -35,19 +35,20 @@ def watermarks(sink: DataFrame, entity_col: str = "stock_ticker",
     )
 
 
-def next_from_date(sink: DataFrame, ticker: str,
+def next_from_date(sink: DataFrame, tickers: list[str],
                    entity_col: str = "stock_ticker",
-                   date_col: str = "stock_date") -> str:
-    """``from`` bound for the next incremental pull: watermark + 1 day.
+                   date_col: str = "stock_date") -> dict[str, str]:
+    """``from`` bound per ticker for the next incremental pull:
+    watermark + 1 day, all tickers from one aggregate.
 
     Mirrors API_manager.py:125 (state + 1 day) with the missing-entity
     sentinel of API_manager.py:91.
     """
-    row = (
-        sink.filter(F.col(entity_col) == ticker)
-        .agg(F.date_add(F.max(F.col(date_col)), 1).alias("next_date"))
-        .first()
+    rows = (
+        watermarks(sink.filter(F.col(entity_col).isin(tickers)),
+                   entity_col, date_col)
+        .select(entity_col, F.date_add("watermark_date", 1).alias("next_date"))
+        .collect()
     )
-    if row is None or row["next_date"] is None:
-        return SENTINEL_DATE
-    return row["next_date"].isoformat()
+    found = {r[0]: r[1].isoformat() for r in rows if r[1] is not None}
+    return {t: found.get(t, SENTINEL_DATE) for t in tickers}
