@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import datetime as dt
 import uuid
+from pathlib import Path
+from urllib.parse import urlparse
 
 import pytest
 
@@ -38,6 +40,19 @@ def make_fetcher(up_to: str):
     return fetch
 
 
+def _parquet_files(spark, lake_dir, dw):
+    """Parquet files under the lake and under each warehouse table."""
+    roots = [Path(lake_dir)]
+    for table in ("stock_prices", "markets"):
+        loc = (
+            spark.sql(f"DESCRIBE TABLE EXTENDED {dw}.{table}")
+            .filter("col_name = 'Location'")
+            .first()["data_type"]
+        )
+        roots.append(Path(urlparse(loc).path))
+    return {str(root): set(root.rglob("*.parquet")) for root in roots}
+
+
 @pytest.fixture
 def dbs(spark):
     tag = uuid.uuid4().hex[:8]
@@ -69,13 +84,18 @@ def test_two_cycle_incremental_pipeline(spark, dbs, tmp_path):
     assert r2.committed["stock_prices"] == 10
     assert r2.committed["markets"] == 0  # dim snapshot unchanged
 
-    # cycle 3: nothing new upstream — fully idempotent
+    # cycle 3: nothing new upstream — fully idempotent, and it writes
+    # no data file to the lake or the warehouse (an empty append must
+    # not leave an empty parquet file behind every idle day)
+    files_before = _parquet_files(spark, lake_dir, dw)
+    assert all(files_before.values())
     r3 = pipeline.run_pipeline(
         spark, make_fetcher("2024-01-15"), tickers, exchanges, lake_dir,
         stage, dw,
     )
     assert r3.fetched["stock_prices"] == 0
     assert r3.committed["stock_prices"] == 0
+    assert _parquet_files(spark, lake_dir, dw) == files_before
 
     fact = spark.table(f"{dw}.stock_prices")
     assert fact.count() == 30
@@ -88,6 +108,30 @@ def test_two_cycle_incremental_pipeline(spark, dbs, tmp_path):
     assert r["stock_date_fmt"] == "15-01-2024"
     assert r["market_companyname"] == "Co AAA"
     assert r["market_exchange"] == "NYSE"
+
+
+def test_cycle_job_budget(spark, dbs, tmp_path):
+    """Spark jobs started by one cycle (the DAG scheduler's job-id
+    delta): deterministic where wall time is not, so a write path that
+    re-scans what it just wrote fails here. Every phase count is
+    observed on its write job, and a cycle that staged no stock rows
+    skips the stock commit."""
+    stage, dw = dbs
+    lake_dir = str(tmp_path / "bronze")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(up_to):
+        before = dag.nextJobId()
+        pipeline.run_pipeline(
+            spark, make_fetcher(up_to), ["AAA", "BBB"], ["NYSE"], lake_dir,
+            stage, dw,
+        )
+        return dag.nextJobId() - before
+
+    jobs("2024-01-10")  # backfill
+    new_day = jobs("2024-01-11")  # one new trading day
+    idle = jobs("2024-01-11")  # nothing new upstream
+    assert new_day <= 16 and idle <= 10, (new_day, idle)
 
 
 def test_new_ticker_joins_incremental_cycle(spark, dbs, tmp_path):

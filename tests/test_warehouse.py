@@ -38,8 +38,17 @@ def test_full_warehouse_lifecycle(spark, dbs):
     mk = markets(spark, SF_SMOKE)
     n_sp = sp.count()
 
-    assert wh.save_to_stage(spark, "stock_prices", sp, stage) == n_sp
-    assert wh.save_to_stage(spark, "markets", mk, stage) == 5
+    def stage_and_reread(table, df):
+        # the count is observed on the INSERT job; check it against an
+        # independent scan of what the overwrite left behind
+        n = wh.save_to_stage(spark, table, df, stage)
+        assert n == spark.table(f"{stage}.{table}").count()
+        return n
+
+    # an empty batch stages 0 rows (and the observation does not hang)
+    assert stage_and_reread("stock_prices", sp.limit(0)) == 0
+    assert stage_and_reread("stock_prices", sp) == n_sp
+    assert stage_and_reread("markets", mk) == 5
 
     assert wh.commit_to_warehouse(spark, "stock_prices", stage, dw) == n_sp
     assert wh.commit_to_warehouse(spark, "markets", stage, dw) == 5
@@ -51,7 +60,7 @@ def test_full_warehouse_lifecycle(spark, dbs):
     assert fact.select("stock_key").distinct().count() == n_sp
 
     # stage truncate-and-reload is an overwrite, not an append
-    assert wh.save_to_stage(spark, "stock_prices", sp, stage) == n_sp
+    assert stage_and_reread("stock_prices", sp) == n_sp
 
     # D4: the generic SQL surface answers over the warehouse
     row = wh.make_query(

@@ -16,7 +16,8 @@ the API is format-agnostic on purpose.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import MARKETS, STOCK_PRICES
 from .scd import new_rows
@@ -77,11 +78,14 @@ def save_to_stage(spark: SparkSession, table: str, df: DataFrame,
     """K3: truncate-and-reload the stage table
     (``save_to_stage`` DB_manager.py:107-136). One INSERT OVERWRITE —
     atomic per partition set, no row-oriented INSERT loop — returns the
-    row count the reference prints (:109)."""
+    row count the reference prints (:109): rows written, observed by the
+    INSERT job itself, so the stage is never read back."""
     schema, _ = _TABLES[table]
-    aligned = df.select(*[c.name for c in schema.fields])
-    aligned.write.mode("overwrite").insertInto(f"`{stage}`.`{table}`")
-    return spark.table(f"`{stage}`.`{table}`").count()
+    obs = Observation()
+    df.select(*[c.name for c in schema.fields]).observe(
+        obs, F.count(F.lit(1)).alias("n")
+    ).write.mode("overwrite").insertInto(f"`{stage}`.`{table}`")
+    return obs.get["n"]
 
 
 def commit_to_warehouse(spark: SparkSession, table: str,

@@ -27,9 +27,10 @@ MARKET_PARTITIONS = ["market_exchange"]
 def write_stocks(df: DataFrame, path: str) -> None:
     """K1: append normalized stock_prices rows to the bronze lake.
 
-    Empty-input guard (P8, API_manager.py:203): an empty write is a
-    harmless no-op in Spark, so no explicit check is needed — but we
-    sort within partitions so row-group stats stay selective.
+    Empty-input guard (P8, API_manager.py:203): an empty write is one
+    job that leaves ``_SUCCESS`` and no parquet file, so no caller
+    guards the empty batch. Rows are sorted within partitions so
+    row-group stats stay selective.
     """
     (
         df.sortWithinPartitions("stock_ticker", "stock_date")
