@@ -23,6 +23,21 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn, *args, **kwargs) -> (jobs, result)``: the Spark
+    jobs one call starts, as the DAG scheduler's job-id delta —
+    deterministic where wall time is not."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def count(fn, *args, **kwargs):
+        before = dag.nextJobId()
+        result = fn(*args, **kwargs)
+        return dag.nextJobId() - before, result
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -130,7 +130,7 @@ def test_incremental_boundary_fetches_exactly_missing_days(spark, tmp_path):
     assert spark.read.parquet(target).count() == 10
 
 
-def test_next_from_date_jobs_do_not_grow_with_tickers(spark):
+def test_next_from_date_jobs_do_not_grow_with_tickers(spark, spark_jobs):
     """All tickers' bounds come from one aggregate: 20 tickers start as
     many Spark jobs as one."""
     tickers = [f"T{i:02d}" for i in range(20)]
@@ -138,13 +138,11 @@ def test_next_from_date_jobs_do_not_grow_with_tickers(spark):
         [(t, dt.date(2024, 1, d)) for t in tickers for d in (1, 2, 3)],
         "stock_ticker string, stock_date date",
     )
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
 
     def jobs(ts):
-        before = dag.nextJobId()
-        frm = next_from_date(sink, ts)
+        n, frm = spark_jobs(next_from_date, sink, ts)
         assert frm == {t: "2024-01-04" for t in ts}
-        return dag.nextJobId() - before
+        return n
 
     assert jobs(tickers[:1]) == jobs(tickers) > 0
 

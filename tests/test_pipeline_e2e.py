@@ -14,42 +14,51 @@ from utn_dataengineering_stockmarketpipeline_spark import pipeline
 from utn_dataengineering_stockmarketpipeline_spark.operators import warehouse as wh
 
 
+def _markets(exchange):
+    return [
+        {"Code": t, "Name": f"Co {t}", "Country": "US",
+         "Exchange": exchange, "Currency": "USD",
+         "Type": "Common Stock", "Isin": f"ISIN{t}"}
+        for t in ("AAA", "BBB")
+    ]
+
+
+def _bar(i: int, d: str) -> dict:
+    return {"date": d, "open": 1.0 + i, "high": 2.0 + i, "low": 0.5 + i,
+            "close": 1.5 + i, "adjusted_close": 1.4 + i, "volume": 100 + i}
+
+
 def make_fetcher(up_to: str):
     """Fixture API serving a calendar that 'grows' as up_to advances."""
     d0 = dt.date(2024, 1, 1)
 
     def fetch(kind, entity, from_date):
         if kind == "market":
-            return [
-                {"Code": t, "Name": f"Co {t}", "Country": "US",
-                 "Exchange": entity, "Currency": "USD",
-                 "Type": "Common Stock", "Isin": f"ISIN{t}"}
-                for t in ("AAA", "BBB")
-            ]
+            return _markets(entity)
         out = []
         for i in range(60):
             d = (d0 + dt.timedelta(days=i)).isoformat()
             if from_date <= d <= up_to:
-                out.append(
-                    {"date": d, "open": 1.0 + i, "high": 2.0 + i,
-                     "low": 0.5 + i, "close": 1.5 + i,
-                     "adjusted_close": 1.4 + i, "volume": 100 + i}
-                )
+                out.append(_bar(i, d))
         return out
 
     return fetch
 
 
+def _table_dir(spark, db, table) -> Path:
+    loc = (
+        spark.sql(f"DESCRIBE TABLE EXTENDED {db}.{table}")
+        .filter("col_name = 'Location'")
+        .first()["data_type"]
+    )
+    return Path(urlparse(loc).path)
+
+
 def _parquet_files(spark, lake_dir, dw):
     """Parquet files under the lake and under each warehouse table."""
-    roots = [Path(lake_dir)]
-    for table in ("stock_prices", "markets"):
-        loc = (
-            spark.sql(f"DESCRIBE TABLE EXTENDED {dw}.{table}")
-            .filter("col_name = 'Location'")
-            .first()["data_type"]
-        )
-        roots.append(Path(urlparse(loc).path))
+    roots = [Path(lake_dir)] + [
+        _table_dir(spark, dw, table) for table in ("stock_prices", "markets")
+    ]
     return {str(root): set(root.rglob("*.parquet")) for root in roots}
 
 
@@ -110,28 +119,66 @@ def test_two_cycle_incremental_pipeline(spark, dbs, tmp_path):
     assert r["market_exchange"] == "NYSE"
 
 
-def test_cycle_job_budget(spark, dbs, tmp_path):
-    """Spark jobs started by one cycle (the DAG scheduler's job-id
-    delta): deterministic where wall time is not, so a write path that
-    re-scans what it just wrote fails here. Every phase count is
-    observed on its write job, and a cycle that staged no stock rows
-    skips the stock commit."""
+def test_cycle_job_budget(spark, dbs, tmp_path, spark_jobs):
+    """Spark jobs started by one cycle: deterministic where wall time is
+    not, so a write path that re-scans what it just wrote fails here.
+    Every phase count is observed on its write job, a cycle that staged
+    no stock rows skips the stock commit, and the stock commit is one
+    append with no empty-batch probe."""
     stage, dw = dbs
     lake_dir = str(tmp_path / "bronze")
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
 
     def jobs(up_to):
-        before = dag.nextJobId()
-        pipeline.run_pipeline(
-            spark, make_fetcher(up_to), ["AAA", "BBB"], ["NYSE"], lake_dir,
-            stage, dw,
+        n, _ = spark_jobs(
+            pipeline.run_pipeline, spark, make_fetcher(up_to), ["AAA", "BBB"],
+            ["NYSE"], lake_dir, stage, dw,
         )
-        return dag.nextJobId() - before
+        return n
 
-    jobs("2024-01-10")  # backfill
+    backfill = jobs("2024-01-10")
     new_day = jobs("2024-01-11")  # one new trading day
     idle = jobs("2024-01-11")  # nothing new upstream
-    assert new_day <= 16 and idle <= 10, (new_day, idle)
+    assert backfill <= 12 and new_day <= 12 and idle <= 8, (
+        backfill, new_day, idle,
+    )
+
+
+def test_commit_prune_is_exact_across_months(spark, dbs, tmp_path):
+    """The stock commit reads only the warehouse partitions from the
+    batch's earliest (year, month) on. The fixture API ignores ``from``
+    and re-serves the whole history, which crosses Jan 31 -> Feb 1 and
+    later gains a late January row, so a prune on the ``from`` bounds
+    (in February) would let January duplicates through."""
+    stage, dw = dbs
+    lake_dir = str(tmp_path / "bronze")
+    days = [dt.date(2024, 1, 29) + dt.timedelta(days=i) for i in range(5)]
+    late = dt.date(2024, 1, 15)  # AAA only
+
+    def cycle(n_days, with_late=False):
+        def fetch(kind, entity, from_date):
+            if kind == "market":
+                return _markets(entity)
+            served = days[:n_days]
+            if with_late and entity == "AAA":
+                served = served + [late]
+            return [_bar(d.day, d.isoformat()) for d in served]
+
+        r = pipeline.run_pipeline(
+            spark, fetch, ["AAA", "BBB"], ["NYSE"], lake_dir, stage, dw,
+        )
+        fact = spark.table(f"{dw}.stock_prices")
+        assert fact.count() == fact.select("stock_key").distinct().count()
+        return r.staged["stock_prices"], r.committed["stock_prices"]
+
+    assert cycle(3) == (6, 6)  # Jan 29-31
+    assert cycle(5) == (10, 4)  # + Feb 1-2; Jan re-served
+    assert cycle(5, with_late=True) == (11, 1)  # + the late Jan 15 row
+    fact_dir = _table_dir(spark, dw, "stock_prices")
+    files = set(fact_dir.rglob("*.parquet"))
+    # a replay stages rows but commits none, and writes no parquet file
+    assert cycle(5, with_late=True) == (11, 0)
+    assert set(fact_dir.rglob("*.parquet")) == files
+    assert spark.table(f"{dw}.stock_prices").count() == 11
 
 
 def test_new_ticker_joins_incremental_cycle(spark, dbs, tmp_path):

@@ -10,12 +10,17 @@ that no value test would catch.
 from __future__ import annotations
 
 import contextlib
+import datetime as dt
 import io
+import re
+import uuid
 
 from pyspark.sql import functions as F
 
 from utn_dataengineering_stockmarketpipeline_spark.operators import dedup
+from utn_dataengineering_stockmarketpipeline_spark.operators import warehouse as wh
 from utn_dataengineering_stockmarketpipeline_spark.plans.catalog import CATALOG
+from utn_dataengineering_stockmarketpipeline_spark.schemas import STOCK_PRICES
 from utn_dataengineering_stockmarketpipeline_spark.sources import lake
 from utn_dataengineering_stockmarketpipeline_spark.sources.parquet import load_table
 
@@ -66,6 +71,51 @@ def test_lake_partition_pruning(spark, tmp_path):
     assert "stock_year" in plan[plan.index("PartitionFilters") :].split("]")[0]
     # pruning is effective, not just present: only 2021 files are read
     assert scan.select(F.count(F.lit(1))).first()[0] == 50
+
+
+def test_scd0_commit_prunes_warehouse_partitions(spark):
+    """The SCD-0 commit's warehouse scan carries a year/month partition
+    filter from the staged batch: after commits in January and
+    February, a February batch reads only February files, and more
+    January days do not add to them."""
+    tag = uuid.uuid4().hex[:8]
+    stage, dw = f"prune_stage_{tag}", f"prune_dw_{tag}"
+
+    def stage_day(d):
+        row = (d, 1.0, 1.0, 1.0, 1.0, 1, "AAA", d.year, d.month, d.day,
+               f"{d}/AAA")
+        df = spark.createDataFrame([row], STOCK_PRICES)
+        return wh.save_to_stage(spark, "stock_prices", df, stage)[1]
+
+    def commit(days):  # one append per day
+        for d in days:
+            since = stage_day(d)
+            wh.commit_to_warehouse(spark, "stock_prices", stage, dw, since)
+
+    def target_scan(d):
+        pending = wh.pending_rows(spark, "stock_prices", stage_day(d), stage, dw)
+        files = {f for f in pending.inputFiles() if f"/{dw}.db/" in f}
+        return plan_of(pending), files
+
+    jan = [dt.date(2024, 1, d) for d in range(1, 7)]
+    wh.create_tables(spark, stage, dw)
+    try:
+        commit(jan[:3] + [dt.date(2024, 2, 1)])
+        plan, files = target_scan(dt.date(2024, 2, 2))
+        scan = re.search(
+            rf"\(\d+\) Scan parquet spark_catalog\.{dw}\.stock_prices\n(.*?)\n\n",
+            plan, re.S,
+        ).group(1)
+        filters = [
+            ln for ln in scan.splitlines() if ln.startswith("PartitionFilters")
+        ]
+        assert filters, scan
+        assert "stock_year" in filters[0] and "stock_month" in filters[0]
+        assert files and all("/stock_year=2024/stock_month=2/" in f for f in files)
+        commit(jan[3:])
+        assert target_scan(dt.date(2024, 2, 2))[1] == files
+    finally:
+        wh.delete_schemas(spark, stage, dw)
 
 
 def test_no_nested_loop_in_lsh_and_simhash_plans(spark):

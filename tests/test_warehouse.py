@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from utn_dataengineering_stockmarketpipeline_spark.operators import warehouse as wh
+from utn_dataengineering_stockmarketpipeline_spark.schemas import STOCK_PRICES
 from utn_dataengineering_stockmarketpipeline_spark.plans.reference_tables import (
     markets,
     stock_prices,
@@ -39,10 +40,17 @@ def test_full_warehouse_lifecycle(spark, dbs):
     n_sp = sp.count()
 
     def stage_and_reread(table, df):
-        # the count is observed on the INSERT job; check it against an
-        # independent scan of what the overwrite left behind
-        n = wh.save_to_stage(spark, table, df, stage)
-        assert n == spark.table(f"{stage}.{table}").count()
+        # the count and the lowest (year, month) are observed on the
+        # INSERT job; check them against an independent scan of what the
+        # overwrite left behind
+        n, since = wh.save_to_stage(spark, table, df, stage)
+        staged = spark.table(f"{stage}.{table}")
+        assert n == staged.count()
+        if table == "stock_prices":
+            lo = F.min(F.struct("stock_year", "stock_month"))
+            assert since == staged.select(lo).first()[0]
+        else:
+            assert since is None
         return n
 
     # an empty batch stages 0 rows (and the observation does not hang)
@@ -72,6 +80,21 @@ def test_full_warehouse_lifecycle(spark, dbs):
 
     wh.truncate_table(spark, stage, "stock_prices")
     assert spark.table(f"{stage}.stock_prices").count() == 0
+
+
+def test_old_fact_layout_fails_loudly(spark, dbs):
+    """CREATE TABLE IF NOT EXISTS keeps a fact table of the older,
+    unpartitioned layout, and positional insertInto would load its
+    columns into the wrong fields: create_tables refuses it by name."""
+    stage, dw = dbs
+    old_ddl = ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}" for f in STOCK_PRICES.fields
+    )
+    spark.sql(f"CREATE DATABASE {dw}")
+    spark.sql(f"CREATE TABLE {dw}.stock_prices ({old_ddl}) USING PARQUET")
+    expected = r"partitioned by \['stock_year', 'stock_month'\]"
+    with pytest.raises(ValueError, match=rf"`{dw}`\.`stock_prices` .*{expected}"):
+        wh.create_tables(spark, stage, dw)
 
 
 def test_reboot_drops_everything(spark, dbs):

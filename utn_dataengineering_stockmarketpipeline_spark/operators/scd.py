@@ -10,9 +10,11 @@ building block (re-delivered rows vanish in the anti-join).
 
 Scale notes: the incoming batch is usually tiny next to the target, but
 the JOIN must still scan the target's keys. Partition-prune the target
-first (``prune`` predicate — e.g. only recent year/month partitions can
-contain colliding keys when keys embed the date), and let AQE pick
-broadcast when the pruned side is small.
+first with the ``prune`` predicate, and let AQE pick broadcast when the
+pruned side is small. The warehouse commit
+(``operators/warehouse.commit_to_warehouse``) does this: its keys embed
+the date, so only year/month partitions at or after the batch's
+earliest one can hold a colliding key.
 """
 
 from __future__ import annotations

@@ -13,7 +13,9 @@ bronze parquet → stage → SCD-0 warehouse commit; then the
   (sources/state.py) — no ``state.json``;
 - the bronze lake partitions by year/month (not day/ticker, §4.1);
 - stage → warehouse is one left-anti append, not a truncate-and-INSERT
-  loop over a WAN, and a cycle that staged nothing skips it;
+  loop over a WAN; it reads only the warehouse's year/month partitions
+  from the batch's earliest one on, and a cycle that staged nothing
+  skips it;
 - counts come from the write jobs; no post-write re-scan.
 
 Everything is injected (fetcher, paths, databases) so the same function
@@ -57,8 +59,9 @@ def run_pipeline(
 ) -> PipelineReport:
     """One full load cycle: dims (full refresh) + facts (incremental).
 
-    Idempotent end to end: re-running with the same upstream data
-    commits zero new rows (SCD-0 absorbs every replay).
+    The warehouse is replay-safe: re-running with the same upstream
+    data commits zero new rows (SCD-0 absorbs every replay). The bronze
+    lake is not yet: a replay appends the same days to it again.
     """
     report = PipelineReport()
     wh.create_tables(spark, stage, warehouse)
@@ -73,11 +76,12 @@ def run_pipeline(
     lake.write_stocks(incoming, lake_dir)  # bronze first (K1)
 
     for table, df in (("markets", dim), ("stock_prices", incoming)):
-        n = wh.save_to_stage(spark, table, df, stage)
+        n, since = wh.save_to_stage(spark, table, df, stage)
         report.fetched[table] = report.staged[table] = n
         # an empty stage cannot add a key: skip the commit's jobs
         report.committed[table] = (
-            wh.commit_to_warehouse(spark, table, stage, warehouse) if n else 0
+            wh.commit_to_warehouse(spark, table, stage, warehouse, since)
+            if n else 0
         )
     return report
 

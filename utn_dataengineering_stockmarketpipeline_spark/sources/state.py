@@ -8,7 +8,7 @@ truncate-before-write that loses state on crash (SURVEY.md §2.9).
 The Spark-native design needs no side state file at all: the sink itself
 is the state. ``max(stock_date) per ticker`` over the warehouse table is
 the exact watermark, is crash-consistent (it can't disagree with the
-data), and is a cheap aggregate that partition-prunes at scale.
+data), and is a cheap aggregate with a map-side partial MAX.
 """
 
 from __future__ import annotations
@@ -26,9 +26,11 @@ def watermarks(sink: DataFrame, entity_col: str = "stock_ticker",
     """Last loaded date per entity: the replacement for state.json.
 
     Returns (entity, watermark_date). Map-side partial MAX makes this a
-    tiny shuffle even over a 100 TB fact table, and a year/month
-    partition layout lets Spark prune to recent partitions when callers
-    bound the lookback.
+    tiny shuffle even over a 100 TB fact table. The warehouse fact is
+    partitioned by year/month, so a caller that bounds the lookback with
+    a filter on those columns reads only recent partitions;
+    :func:`next_from_date` sets no bound (a ticker's last date may lie
+    in any month) and scans them all.
     """
     return sink.groupBy(F.col(entity_col)).agg(
         F.max(F.col(date_col)).alias("watermark_date")
