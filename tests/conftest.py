@@ -11,6 +11,19 @@ sys.path.insert(0, str(REPO))
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def run_to_memory(stream, query_name: str, output_mode: str = "complete"):
+    """Drain an availableNow stream into the in-memory sink; read it
+    back with ``spark.table(query_name)``."""
+    (
+        stream.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from utn_dataengineering_stockmarketpipeline_spark.session import get_spark

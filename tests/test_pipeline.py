@@ -239,10 +239,33 @@ def test_lake_roundtrip_partition_layout_and_compaction(spark, tmp_path):
     assert after.count() == 2 * days
     assert sorted(after.columns) == sorted(back.columns)
     # compaction merged the two appends: one file per leaf partition
-    for month_dir in months:
-        leaf = os.path.join(path, "stock_year=2024", month_dir)
-        files = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
-        assert len(files) == 1
+    def leaf_files():
+        return {
+            month_dir: [
+                f for f in os.listdir(
+                    os.path.join(path, "stock_year=2024", month_dir)
+                ) if f.endswith(".parquet")
+            ]
+            for month_dir in months
+        }
+
+    assert {m: len(fs) for m, fs in leaf_files().items()} == {
+        m: 1 for m in months
+    }
+
+    # a small target splits each leaf into ceil(rows/target) files
+    per_leaf = {
+        f"stock_month={r['stock_month']}": r["count"]
+        for r in after.groupBy("stock_month").count().collect()
+    }
+    keys = sorted(r["stock_key"] for r in after.select("stock_key").collect())
+    target = 4
+    lake.compact(spark, path, lake.STOCK_PARTITIONS, target_rows_per_file=target)
+    assert {m: len(fs) for m, fs in leaf_files().items()} == {
+        m: -(-n // target) for m, n in per_leaf.items()
+    }
+    again = lake.read_lake(spark, path)
+    assert sorted(r["stock_key"] for r in again.select("stock_key").collect()) == keys
 
 
 def test_scd2_idempotent_and_versions(spark):

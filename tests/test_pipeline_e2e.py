@@ -233,18 +233,15 @@ def test_empty_inputs_commit_nothing(spark, dbs, tmp_path):
 
 def test_corpus_release_end_to_end(spark, tmp_path):
     """The LLM-corpus release flow, end to end on real files: curated
-    catalog query -> seeded-shuffle shard export -> atomic snapshot
-    publish -> (bad release) -> rollback serves the previous version.
+    catalog query -> atomic snapshot publish -> (bad release) ->
+    rollback serves the previous version.
 
     Each stage is an already-verified unit; this pins the COMPOSITION —
-    schemas line up, the export consumes the curation output, the
-    snapshot layer versions the export manifest + shards together."""
+    the snapshot layer versions the curation output as written, and a
+    rollback reproduces the curated corpus exactly."""
     from utn_dataengineering_stockmarketpipeline_spark.plans.catalog import CATALOG
     from utn_dataengineering_stockmarketpipeline_spark.sources import (
         snapshots as sn,
-    )
-    from utn_dataengineering_stockmarketpipeline_spark.sources.lake import (
-        write_training_shards,
     )
     from utn_dataengineering_stockmarketpipeline_spark.sources.parquet import (
         load_table,
@@ -259,26 +256,18 @@ def test_corpus_release_end_to_end(spark, tmp_path):
     n_curated = docs.count()
     assert 0 < n_curated < load_table(spark, sf, "documents").count()
 
-    shards1 = str(tmp_path / "shards_v1")
-    manifest1 = write_training_shards(
-        docs, shards1, n_shards=4, shuffle_seed="release-1"
-    )
-    v1 = sn.publish_snapshot(manifest1, root)
-    assert sn.read_snapshot(spark, root).agg({"n_docs": "sum"}).first()[0] == n_curated
+    v1 = sn.publish_snapshot(docs, root)
+    assert sn.read_snapshot(spark, root).count() == n_curated
 
-    # release 2: a (deliberately bad) empty-gate release
-    shards2 = str(tmp_path / "shards_v2")
-    manifest2 = write_training_shards(
-        docs.limit(3), shards2, n_shards=4, shuffle_seed="release-2"
-    )
-    v2 = sn.publish_snapshot(manifest2, root)
+    # release 2: a (deliberately bad) 3-document release
+    v2 = sn.publish_snapshot(docs.limit(3), root)
     assert sn.current_version(spark, root) == v2
-    assert sn.read_snapshot(spark, root).agg({"n_docs": "sum"}).first()[0] == 3
+    assert sn.read_snapshot(spark, root).count() == 3
 
     # rollback: the previous release is immediately current again,
-    # and its shard files still reproduce the curated corpus exactly
+    # and its files still reproduce the curated corpus exactly
     sn.rollback(spark, root, to_version=v1)
-    assert sn.read_snapshot(spark, root).agg({"n_docs": "sum"}).first()[0] == n_curated
-    back = spark.read.parquet(shards1)
+    back = sn.read_snapshot(spark, root)
     assert back.count() == n_curated
     assert back.select("doc_id").distinct().count() == n_curated
+    assert back.exceptAll(docs.select(*back.columns)).isEmpty()

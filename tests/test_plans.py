@@ -183,44 +183,6 @@ def test_whole_stage_codegen_covers_transform_layer(spark):
     assert "* Project" in plan
 
 
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    """Co-bucketed tables pay the shuffle at write; the join is
-    exchange-free (the 100 TB fact-to-fact join shape)."""
-    import uuid
-
-    from utn_dataengineering_stockmarketpipeline_spark.sources.lake import (
-        write_bucketed,
-    )
-
-    tag = uuid.uuid4().hex[:8]
-    ta, tb = f"bkt_a_{tag}", f"bkt_b_{tag}"
-    orders = load_table(spark, SF_SMOKE, "orders").select(
-        "o_orderkey", "o_totalprice"
-    )
-    li = load_table(spark, SF_SMOKE, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-    )
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        write_bucketed(orders, ta, "o_orderkey", n_buckets=8)
-        write_bucketed(li, tb, "o_orderkey", n_buckets=8)
-        # disable broadcast so the fact-to-fact (sort-merge) shape shows;
-        # at 100 TB neither side would fit a broadcast anyway
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table(ta).join(spark.table(tb), "o_orderkey")
-        plan = plan_of(joined)
-        assert "Exchange hashpartitioning" not in plan, (
-            "bucketed join still shuffles"
-        )
-        assert "SortMergeJoin" in plan
-        # and it returns the same rows as the shuffled join
-        assert joined.count() == orders.join(li, "o_orderkey").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql(f"DROP TABLE IF EXISTS {ta}")
-        spark.sql(f"DROP TABLE IF EXISTS {tb}")
-
-
 def test_tfidf_and_clusters_no_nested_loop(spark):
     for name in ("llm_tfidf_top_terms", "llm_dup_clusters", "ref_scd2_markets"):
         plan = plan_of(CATALOG[name].build(spark, SF_SMOKE))
@@ -883,64 +845,3 @@ def test_round17_queries_plan_shapes(spark):
         CATALOG["llm_kl_source_divergence"].build(spark, SF_SMOKE)
     )
     assert "CartesianProduct" not in plan
-
-
-def test_staged_r19_r20_plan_shapes(spark):
-    """Plan guards for the operators pre-built this round (registered
-    r19/r20) — pinned now so a regression can't hide in the gap."""
-    import re
-
-    from utn_dataengineering_stockmarketpipeline_spark.operators import (
-        graph,
-        risk,
-        skew,
-    )
-    from utn_dataengineering_stockmarketpipeline_spark.operators import (
-        text as text_ops,
-    )
-    from utn_dataengineering_stockmarketpipeline_spark.plans.reference_tables import (
-        stock_prices,
-    )
-    from utn_dataengineering_stockmarketpipeline_spark.sources.parquet import (
-        load_table,
-    )
-
-    sp = stock_prices(spark, SF_SMOKE)
-    docs = load_table(spark, SF_SMOKE, "documents")
-
-    # calmar + ulcer: ONE per-entity window (the running peak) + one
-    # aggregate, no join beyond the final projection
-    for df in (risk.calmar_ratio(sp), risk.ulcer_index(sp)):
-        plan = plan_of(df)
-        assert "CartesianProduct" not in plan
-        assert len(re.findall(r"\(\d+\) Window", plan)) == 1
-
-    # CvM: the ks_drift grid shape — broadcast grid joins, no
-    # corpus-side sort-merge
-    plan = plan_of(skew.cvm_drift(docs, "n_chars", "source"))
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
-
-    # assortativity: degree attaches are equi-joins; no window, no
-    # cartesian, no nested-loop fallback
-    plan = plan_of(
-        graph.degree_assortativity(
-            docs.selectExpr("source as src", "lang as dst")
-        )
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "Window" not in plan
-
-    # burstiness: one 1-row broadcast (the scalar-subquery pattern is
-    # the ONLY nested-loop join allowed), vocab-bounded aggregate, no
-    # window
-    plan = plan_of(text_ops.term_burstiness(docs))
-    assert "Window" not in plan
-    assert "CartesianProduct" not in plan
-
-    # vocab overlap: the term equi-join never degenerates to a
-    # cartesian; margins attach on the source key
-    plan = plan_of(text_ops.source_vocab_overlap(docs))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan

@@ -20,11 +20,8 @@ from utn_dataengineering_stockmarketpipeline_spark.streaming import (
     stream_parquet,
     tumbling_agg,
 )
-from utn_dataengineering_stockmarketpipeline_spark.streaming.ingest import (
-    run_to_memory,
-)
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, run_to_memory
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -562,61 +559,6 @@ def test_quota_admission_multibatch_matches_batch_truth(
     assert got
     for uid, adm in got.items():
         assert adm == want[uid]
-
-
-def _protobuf_available() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    _protobuf_available(),
-    reason="protobuf present: the gate should NOT trip here",
-)
-def test_quota_tws_gate_raises_actionable_importerror(spark):
-    from utn_dataengineering_stockmarketpipeline_spark.streaming.ingest import (
-        stateful_quota_admission_tws,
-    )
-
-    events = load_table(spark, SF_SMOKE, "events")
-    with pytest.raises(ImportError, match="protobuf"):
-        stateful_quota_admission_tws(events, "user_id", k=3)
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs google.protobuf in workers",
-)
-def test_quota_tws_matches_applyinpandas_twin(spark, events_split, tmp_path):
-    """Where protobuf exists, the StatefulProcessor twin must produce
-    the same final per-key admission as the registered operator."""
-    from utn_dataengineering_stockmarketpipeline_spark.streaming.ingest import (
-        stateful_quota_admission_tws,
-    )
-
-    base, d1, d2 = events_split
-    stage = tmp_path / "in"
-    stage.mkdir()
-    spark.read.parquet(d1).coalesce(1).write.mode("append").parquet(str(stage))
-    stream = stream_parquet(spark, str(stage), EVENTS_SCHEMA)
-    name = "tws_" + uuid.uuid4().hex[:8]
-    run_to_memory(
-        stateful_quota_admission_tws(stream, "user_id", k=3), name, "update"
-    )
-    got = {
-        r["user_id"]: r["n_admitted"] for r in spark.table(name).collect()
-    }
-    want = {
-        r["user_id"]: min(3, r["n"])
-        for r in spark.read.parquet(d1)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
 
 
 def test_stream_scd2_apply_version_chains(spark):

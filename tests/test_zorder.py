@@ -1,18 +1,14 @@
-"""Z-order layout: Morton key correctness vs a Python bit-twiddling
-reference, and the locality property that justifies it — z-laid files
-bound BOTH curve columns' min/max spans, where a single-column sort
-leaves the other column spanning the full domain."""
+"""Z-order (Morton) keys: interleave_bits against a Python bit-twiddling
+reference, and quantize's clamped end cells."""
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from utn_dataengineering_stockmarketpipeline_spark.functions.zorder import (
     interleave_bits,
     quantize,
-    zorder_write,
 )
 
 
@@ -57,61 +53,3 @@ def test_quantize_bounds(spark):
     ]
     assert got[0] == 0 and got[-1] == 255 and 0 < got[1] < 255
 
-
-def test_zorder_layout_bounds_both_columns(spark, tmp_path):
-    # 64 tickers x 1024 days, exhaustive grid
-    df = spark.range(64 * 1024).select(
-        (F.col("id") % 64).alias("ticker_id"),
-        (F.col("id") / 64).cast("long").alias("day"),
-    )
-    z_path, lin_path = str(tmp_path / "z"), str(tmp_path / "lin")
-    # per-column widths matched to cardinality: 6 bits cover the 64
-    # tickers exactly, 10 the 1024 days
-    zorder_write(df, z_path, ["ticker_id", "day"], bits=[6, 10],
-                 num_files=16)
-    (
-        df.repartitionByRange(16, "day").sortWithinPartitions("day")
-        .write.mode("overwrite").parquet(lin_path)
-    )
-
-    def file_ranges(path):
-        ranges = []
-        ds = pq.ParquetDataset(path)
-        for frag in ds.fragments:
-            md = frag.metadata
-            mins = {c: None for c in ("ticker_id", "day")}
-            maxs = {c: None for c in ("ticker_id", "day")}
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    name = col.path_in_schema
-                    if name in mins:
-                        st = col.statistics
-                        mins[name] = st.min if mins[name] is None else min(mins[name], st.min)
-                        maxs[name] = st.max if maxs[name] is None else max(maxs[name], st.max)
-            ranges.append({c: (mins[c], maxs[c]) for c in mins})
-        return ranges
-
-    def probe_cost(ranges, col, vals):
-        """Average # files a min/max-pruning reader opens for a point
-        predicate on ``col``."""
-        hits = [
-            sum(1 for r in ranges if r[col][0] <= v <= r[col][1])
-            for v in vals
-        ]
-        return sum(hits) / len(hits)
-
-    z_ranges, lin_ranges = file_ranges(z_path), file_ranges(lin_path)
-    tickers, days = range(64), range(0, 1024, 16)
-    lin_t = probe_cost(lin_ranges, "ticker_id", tickers)
-    z_t = probe_cost(z_ranges, "ticker_id", tickers)
-    z_d = probe_cost(z_ranges, "day", days)
-    # linear-by-day: every file spans ALL tickers, so a ticker probe
-    # opens all 16 files. The z-layout bounds BOTH dimensions: either
-    # probe opens only the files whose curve block covers it (ideal 4
-    # of 16 for a 4x4 block grid; range-partition boundaries straddle
-    # blocks, so allow ~2x slop).
-    assert lin_t == 16.0
-    assert z_t <= 8, z_t
-    assert z_d <= 8, z_d

@@ -163,27 +163,6 @@ def main() -> None:
              _sourced(docs_1x), "n_chars", "source"),
          lambda: skew.kruskal_wallis_drift(
              _sourced(docs_nx), "n_chars", "source"))
-    # Cramér-von Mises (staged r17→r19) is the 9th counts-grid
-    # consumer — the ks_drift grid with a squared-deviation reduce in
-    # place of the max; identical scan-bound expectation
-    pair("cvm_drift",
-         lambda: skew.cvm_drift(
-             _sourced(docs_1x), "n_chars", "source"),
-         lambda: skew.cvm_drift(
-             _sourced(docs_nx), "n_chars", "source"))
-    # Mood's median test (staged r16→r18) is the 8th counts-grid
-    # consumer — one value-domain cumulative pass + one group
-    # aggregate, same scan-bound expectation as KS/KW
-    pair("mood_median",
-         lambda: skew.mood_median_drift(
-             _sourced(docs_1x), "n_chars", "source"),
-         lambda: skew.mood_median_drift(
-             _sourced(docs_nx), "n_chars", "source"))
-    # Heaps saturation (staged r16→r18): token explode scans scale,
-    # the first-bucket min-aggregate is vocab-bounded like zipf's
-    pair("heaps_law",
-         lambda: text_ops.heaps_law(docs_1x),
-         lambda: text_ops.heaps_law(docs_nx))
     # Zipf slope: the token-count shuffle scales, the vocabulary
     # relation (replicated text -> constant distinct terms) does not
     pair("zipf_slope",
@@ -197,30 +176,6 @@ def main() -> None:
              docs_1x.withColumn(
                  "source", F.concat(F.lit("src"), F.col("doc_id") % 10))),
          lambda: text_ops.kl_source_divergence(
-             docs_nx.withColumn(
-                 "source", F.concat(F.lit("src"), F.col("doc_id") % 10))))
-    # Theil T inequality (staged r17→r19): one scan + 1-row broadcast
-    # over the per-row value — pure scan-bound, the KL cell discipline
-    # without even the cell relation
-    pair("theil_index",
-         lambda: skew.theil_inequality(
-             _sourced(docs_1x).filter(F.col("n_chars") > 0), "n_chars"),
-         lambda: skew.theil_inequality(
-             _sourced(docs_nx).filter(F.col("n_chars") > 0), "n_chars"))
-    # term burstiness (staged r17→r20): the (doc, term) cell shuffle
-    # scales with the corpus, the per-term output relation (replicated
-    # text → constant vocabulary) does not — zipf's posture
-    pair("term_burstiness",
-         lambda: text_ops.term_burstiness(docs_1x),
-         lambda: text_ops.term_burstiness(docs_nx))
-    # source vocab overlap (staged r17→r19): per-source DISTINCT term
-    # sets are vocabulary-bounded (constant under replication); only
-    # the distinct shuffle scans scale
-    pair("source_vocab_overlap",
-         lambda: text_ops.source_vocab_overlap(
-             docs_1x.withColumn(
-                 "source", F.concat(F.lit("src"), F.col("doc_id") % 10))),
-         lambda: text_ops.source_vocab_overlap(
              docs_nx.withColumn(
                  "source", F.concat(F.lit("src"), F.col("doc_id") % 10))))
 
@@ -271,17 +226,6 @@ def main() -> None:
             docs.withColumn("n_chars", F.length("text"))
         ).filter(F.col("modality") == "image")
 
-    # local clustering coefficient (staged r17→r20) over the scrambled
-    # LSH candidate graph: the triangle_stats ordered 3-join resolved
-    # per node — candidate-edge-bounded like the census, the explode
-    # adds 3 rows per found triangle (output-bounded)
-    from utn_dataengineering_stockmarketpipeline_spark.operators.graph import (
-        local_clustering,
-    )
-
-    pair("local_clustering",
-         lambda: local_clustering(dedup.minhash_candidates(sc_1x)),
-         lambda: local_clustering(dedup.minhash_candidates(sc_nx)))
     pair("phash_pairs",
          lambda: multimodal.phash_near_pairs(_assets(sc_1x)),
          lambda: multimodal.phash_near_pairs(_assets(sc_nx)))
@@ -367,63 +311,6 @@ def main() -> None:
         bench._full_gc(spark)
         t0 = time.perf_counter()
         rows = pagerank(edges, iters=10).count()
-        out[label] = {"sec": round(time.perf_counter() - t0, 3),
-                      "rows": rows}
-        print(f"  {label}: {out[label]}", flush=True)
-        edges.unpersist()
-
-    # degree assortativity (staged r17→r19) on the same namespace
-    # replica: two degree aggregates + two equi-joins + one moment
-    # pass, no iteration — should be the cheapest graph entry by far
-    from utn_dataengineering_stockmarketpipeline_spark.operators.graph import (
-        degree_assortativity,
-    )
-
-    for label, fac in (("assortativity_1x", 1),
-                       (f"assortativity_{factor}x", factor)):
-        rep = spark.range(fac).select(F.col("id").alias("rep"))
-        edges = base.crossJoin(rep).select(
-            F.concat(F.lit("C"), F.col("rep"), F.lit("_"),
-                     F.col("o_custkey")).alias("src"),
-            F.concat(F.lit("S"), F.col("rep"), F.lit("_"),
-                     F.col("l_suppkey")).alias("dst"),
-        ).distinct().persist()
-        edges.count()
-        bench._full_gc(spark)
-        t0 = time.perf_counter()
-        rows = degree_assortativity(edges).count()
-        out[label] = {"sec": round(time.perf_counter() - t0, 3),
-                      "rows": rows}
-        print(f"  {label}: {out[label]}", flush=True)
-        edges.unpersist()
-
-    # Personalized PageRank (staged r16→r18) on the same namespace
-    # replica: the pagerank loop with a teleport column on the node
-    # relation — seeds replicate WITH the namespace so per-replica
-    # teleport structure is factor-invariant; wall should track
-    # pagerank's
-    from utn_dataengineering_stockmarketpipeline_spark.operators.graph import (
-        personalized_pagerank,
-    )
-
-    for label, fac in (("ppr_1x", 1), (f"ppr_{factor}x", factor)):
-        rep = spark.range(fac).select(F.col("id").alias("rep"))
-        edges = base.crossJoin(rep).select(
-            F.concat(F.lit("C"), F.col("rep"), F.lit("_"),
-                     F.col("o_custkey")).alias("src"),
-            F.concat(F.lit("S"), F.col("rep"), F.lit("_"),
-                     F.col("l_suppkey")).alias("dst"),
-        ).distinct().persist()
-        edges.count()
-        seeds = (
-            spark.range(fac).select(F.col("id").alias("rep"))
-            .crossJoin(spark.range(100).select(F.col("id").alias("ck")))
-            .select(F.concat(F.lit("C"), F.col("rep"), F.lit("_"),
-                             F.col("ck")).alias("node"))
-        )
-        bench._full_gc(spark)
-        t0 = time.perf_counter()
-        rows = personalized_pagerank(edges, seeds, iters=10).count()
         out[label] = {"sec": round(time.perf_counter() - t0, 3),
                       "rows": rows}
         print(f"  {label}: {out[label]}", flush=True)
@@ -602,25 +489,6 @@ def main() -> None:
     pair("var_historical",
          lambda: risk.var_cvar(risk.returns_ppm(var_1x)),
          lambda: risk.var_cvar(risk.returns_ppm(var_nx)))
-    # Sortino / Omega (staged r16→r18): one map-side-combined
-    # aggregate each over the same ticker replica — pure scan-bound,
-    # the lightest members of the risk family
-    pair("sortino",
-         lambda: risk.sortino_ratio(risk.returns_ppm(var_1x)),
-         lambda: risk.sortino_ratio(risk.returns_ppm(var_nx)))
-    pair("omega",
-         lambda: risk.omega_ratio(risk.returns_ppm(var_1x)),
-         lambda: risk.omega_ratio(risk.returns_ppm(var_nx)))
-    # Calmar + Ulcer (staged r17→r19/r20): one running-peak window per
-    # entity + one aggregate over the same ticker namespace replica —
-    # partition size constant, only partition count grows; expect the
-    # var_historical rank-window posture
-    pair("calmar",
-         lambda: risk.calmar_ratio(var_1x),
-         lambda: risk.calmar_ratio(var_nx))
-    pair("ulcer",
-         lambda: risk.ulcer_index(var_1x),
-         lambda: risk.ulcer_index(var_nx))
     var_1x.unpersist(), var_nx.unpersist()
 
     # Mann-Kendall + Theil-Sen eval (r14): the O(n²/2)-per-entity pair

@@ -80,6 +80,9 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as e
+    from utn_dataengineering_stockmarketpipeline_spark.plans.reference_tables import (
+        evict_materialized,
+    )
 
     failures: list[str] = []
 
@@ -119,6 +122,8 @@ def main() -> int:
             else:
                 print(f"  {name}: ok ({len(s)} rows, {dt:.1f}s)", flush=True)
         con.close()
+        # the next SF builds its own reference tables; free this SF's
+        evict_materialized(spark, sf)
 
     print()
     if failures:

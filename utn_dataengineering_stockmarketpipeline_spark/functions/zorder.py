@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -69,33 +69,3 @@ def quantize(col: Column, lo: Column | float, hi: Column | float,
     scaled = ((col - lo_c) * cells / F.nullif(span, F.lit(0))).cast("long")
     return F.least(F.greatest(F.coalesce(scaled, F.lit(0)), F.lit(0)),
                    F.lit(cells))
-
-
-def zorder_write(df: DataFrame, path: str, cols: list[str],
-                 bits: int | list[int] = 12, num_files: int = 8) -> None:
-    """Rewrite ``df`` as ``num_files`` parquet files laid out along the
-    Z-curve of ``cols``: quantize each curve column by its global
-    min/max (one tiny agg pass), compute the Morton key,
-    ``repartitionByRange`` on it (range partitioning ⇒ files own
-    contiguous curve segments) and sort within each file so row-group
-    stats are tight. Range predicates on any curve column then skip
-    most files on min/max stats alone — the multi-dimensional
-    equivalent of the sorted single-column layout ``write_stocks``
-    uses."""
-    widths = [bits] * len(cols) if isinstance(bits, int) else list(bits)
-    stats = df.agg(
-        *[F.min(c).alias(f"__lo_{c}") for c in cols],
-        *[F.max(c).alias(f"__hi_{c}") for c in cols],
-    ).first()
-    q = [
-        quantize(F.col(c), float(stats[f"__lo_{c}"]),
-                 float(stats[f"__hi_{c}"]), w)
-        for c, w in zip(cols, widths)
-    ]
-    (
-        df.withColumn("__z", interleave_bits(q, bits))
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite").parquet(path)
-    )

@@ -69,15 +69,6 @@ def exact_duplicates(df: DataFrame, text_col: str = "text",
     )
 
 
-def dedup_exact(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Keep one row per distinct text (the min-id survivor)."""
-    keep = exact_duplicates(df, text_col, id_col).select(
-        F.col("canonical_id").alias(id_col)
-    )
-    return df.join(keep, on=id_col, how="left_semi")
-
-
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", k: int = 3,
                        num_perms: int = 8,

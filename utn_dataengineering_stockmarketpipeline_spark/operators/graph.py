@@ -252,120 +252,6 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     return ranks
 
 
-def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
-                          iters: int = DEFAULT_ITERS,
-                          damping: float = 0.85,
-                          src: str = "src", dst: str = "dst",
-                          seed_col: str = "node",
-                          loop_parts: int | None = None) -> DataFrame:
-    """Personalized PageRank from a seed set → ``(node, rank)`` —
-    built r16, staged for r18: :func:`pagerank` with the teleport mass
-    concentrated on ``seeds`` instead of spread uniformly, so rank
-    measures proximity TO THE SEEDS through the link structure — the
-    similarity/recommendation primitive ("suppliers important to THIS
-    customer segment") where global PageRank answers global prestige,
-    and the standard seed-expansion tool on a duplicate graph (walk
-    from known-bad documents to find their neighborhoods).
-
-    Same simple-leak power iteration as :func:`pagerank` (dangling
-    rank absorbs; rounds chain lazily with a localCheckpoint every
-    ``checkpoint_every``-equivalent 5 rounds via the same fixed-DAG
-    discipline; final ROUND 9 both engines): r⁰ = 1/|S| on seeds else
-    0, rᵏ⁺¹_i = (1−d)·1[i∈S]/|S| + d·Σ_{j→i} rᵏ_j/outdeg_j. The
-    per-node teleport column rides the persisted node relation, so
-    each round stays the pagerank shape exactly — one edge⋈rank
-    co-partitioned join, one partial-aggregated contribution shuffle,
-    one left join; no extra per-round seed join.
-
-    Seeds outside the graph's node set are ignored (left-semi against
-    the node inventory — they have no edges to walk and would strand
-    teleport mass on isolated rows the oracle never sees); an empty
-    effective seed set returns the empty relation rather than NaN
-    ranks.
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")
-                     ).persist()
-    m = e.count()
-    nodes_raw = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    sd = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .join(nodes_raw, "node", "left_semi")
-        .persist()
-    )
-    s = sd.count()
-    if s == 0:
-        e.unpersist()
-        out = nodes_raw.withColumn(
-            "rank", F.lit(None).cast("double")
-        ).filter(F.lit(False))
-        nodes_raw.unpersist()
-        sd.unpersist()
-        return out
-    spark = edges.sparkSession
-    if loop_parts is None:
-        session_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        loop_parts = max(4, min(session_parts, -(-m // 75_000)))
-    teleport = (1.0 - damping) / s
-    # the teleport vector rides the node relation ONCE (persisted,
-    # partitioned for the per-round left join) — seed membership never
-    # re-joins inside the loop
-    nodes = (
-        nodes_raw.join(
-            sd.withColumn("__is_seed", F.lit(True)), "node", "left"
-        )
-        .select(
-            "node",
-            F.when(F.col("__is_seed"), F.lit(teleport))
-            .otherwise(F.lit(0.0))
-            .alias("tele"),
-            F.when(F.col("__is_seed"), F.lit(1.0 / s))
-            .otherwise(F.lit(0.0))
-            .alias("r0"),
-        )
-        .repartition(loop_parts, "node")
-        .persist()
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    we = e.join(outdeg, "src").repartition(loop_parts, "src").persist()
-    we.count()
-
-    ranks = nodes.select("node", F.col("r0").alias("rank"))
-    for it in range(iters):
-        contrib = (
-            we.join(ranks, we["src"] == ranks["node"])
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-            .repartition(loop_parts, "dst")
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = nodes.join(
-            contrib, nodes["node"] == contrib["dst"], "left"
-        ).select(
-            "node",
-            (
-                F.col("tele")
-                + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-            ).alias("rank"),
-        )
-        if (it + 1) % 5 == 0 and it + 1 < iters:
-            ranks = ranks.localCheckpoint()
-    ranks = ranks.localCheckpoint()
-    e.unpersist()
-    nodes_raw.unpersist()
-    sd.unpersist()
-    nodes.unpersist()
-    we.unpersist()
-    return ranks
-
-
 def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 4,
              src: str = "src", dst: str = "dst",
              node_col: str = "node") -> DataFrame:
@@ -1121,132 +1007,3 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         e_src.unpersist()
         e_dst.unpersist()
     return out
-
-
-def degree_assortativity(edges: DataFrame, src: str = "src",
-                         dst: str = "dst") -> DataFrame:
-    """Directed degree assortativity (Newman) → ONE row ``(n_edges,
-    r_ppm)`` (built r17, staged for r19): the Pearson correlation,
-    ACROSS EDGES, of the source's out-degree with the target's
-    in-degree — the one-number answer to "do well-connected buyers
-    order from well-connected suppliers, or is the graph
-    hub-and-spoke?" Positive = assortative (hubs wire to hubs, dense
-    cores — LPA/k-core find real communities), negative =
-    disassortative (hubs wire to leaves, star topology — expect skewed
-    join keys and broadcast-delta peeling to shine). The structural
-    scalar a pipeline reads BEFORE paying for the iterative family
-    (pagerank/HITS/k-core): it predicts which of them will be
-    informative.
-
-    Exact integer moments: degrees are exact BIGINT counts, the five
-    Pearson moments over (x = outdeg(src), y = indeg(dst)) per edge
-    are exact DECIMAL(38,0) sums (x ≤ |E|, so Σx² ≤ |E|³ — exact to
-    ~1e12 edges), and r is derived in ONE pinned double association
-    (the acf_ppm/variance_ratio discipline: identical integers through
-    identical correctly-rounded ops in both engines) quantized ONCE to
-    signed ppm with the mode-stable ``floor(r·1e6 + 0.5)``. Degenerate
-    graphs (under 2 edges or zero variance on either side — every
-    source the same out-degree) drop, mirroring acf_ppm's guards.
-
-    Scale: two map-side-combined degree aggregates, two equi-joins
-    back onto the edge list (no hint — AQE broadcasts a degree
-    relation when it fits; at web scale both stay shuffle joins on
-    the SAME key the edge list already shuffles on), one five-moment
-    aggregate. Linear in |E|, no pair space, no iteration, no
-    collect.
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    outd = e.groupBy("src").agg(F.count(F.lit(1)).alias("x"))
-    ind = e.groupBy("dst").agg(F.count(F.lit(1)).alias("y"))
-    dec = "decimal(38,0)"
-    xy = e.join(outd, "src").join(ind, "dst")
-    m = xy.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast(dec)).alias("sx"),
-        F.sum(F.col("y").cast(dec)).alias("sy"),
-        F.sum(F.col("x").cast(dec) * F.col("y").cast(dec)).alias("sxy"),
-        F.sum(F.col("x").cast(dec) * F.col("x").cast(dec)).alias("sxx"),
-        F.sum(F.col("y").cast(dec) * F.col("y").cast(dec)).alias("syy"),
-    )
-    n, sx, sy = [F.col(c).cast("double") for c in ("n", "sx", "sy")]
-    sxy, sxx, syy = [F.col(c).cast("double") for c in ("sxy", "sxx", "syy")]
-    vx = n * sxx - sx * sx
-    vy = n * syy - sy * sy
-    r = (n * sxy - sx * sy) / (F.sqrt(vx) * F.sqrt(vy))
-    return (
-        m.filter((F.col("n") >= 2) & (vx > 0) & (vy > 0))
-        .select(
-            F.col("n").cast("bigint").alias("n_edges"),
-            F.floor(r * F.lit(1000000.0) + F.lit(0.5))
-            .cast("bigint")
-            .alias("r_ppm"),
-        )
-    )
-
-
-def local_clustering(pairs: DataFrame, id_a: str = "id_a",
-                     id_b: str = "id_b") -> DataFrame:
-    """Per-node local clustering coefficient of an undirected pair
-    graph → ``(node, deg, n_tri, local_cc_ppm)`` for every node with
-    ``deg ≥ 2`` (built r17, staged for r20) — :func:`triangle_stats`'
-    global census resolved PER NODE: the global coefficient says "do
-    the LSH candidate pairs agree with each other overall"; the local
-    one names WHICH documents sit in closed cliques (true duplicate
-    groups — safe to collapse) versus which are boilerplate hubs whose
-    neighbors never interconnect (the stitching nodes a dedup pass
-    should refuse to merge through). local_cc = triangles_at_node /
-    C(deg, 2), emitted as exact integral ppm
-    ``(2·n_tri·1e6) div (deg·(deg−1))``.
-
-    Triangle attribution: the same canonical a<b edge relation and
-    ordered 3-join as triangle_stats (each triangle a<b<c found
-    exactly once), then each found triangle credits ALL THREE corners
-    via one explode — so Σ n_tri = 3·n_triangles exactly, the
-    identity the staged validation asserts. Degree-0/1 nodes have no
-    wedge and drop (C(deg,2) = 0, the ks_drift degenerate-split
-    rule). Integer end to end.
-
-    Scale: the triangle join is the triangle_stats join verbatim
-    (degree-bounded by the upstream LSH bucket cap), the explode adds
-    3 rows per triangle (output-bounded), the final left join rides
-    the node relation. No new shuffle shapes beyond the census.
-    """
-    a, b = F.col(id_a), F.col(id_b)
-    e = (
-        pairs.filter(a != b)
-        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    e1 = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = e.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    tris = e1.join(e2, "y").join(e3, ["x", "z"])
-    tri_n = (
-        tris.select(
-            F.explode(F.array(F.col("x"), F.col("y"), F.col("z")))
-            .alias("node")
-        )
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("n_tri"))
-    )
-    return (
-        deg.filter(F.col("deg") >= 2)
-        .join(tri_n, "node", "left")
-        .select(
-            "node",
-            "deg",
-            F.coalesce(F.col("n_tri"), F.lit(0).cast("bigint"))
-            .alias("n_tri"),
-            F.expr(
-                "(coalesce(n_tri, 0) * 2000000)"
-                " div (cast(deg as bigint) * (deg - 1))"
-            ).alias("local_cc_ppm"),
-        )
-    )

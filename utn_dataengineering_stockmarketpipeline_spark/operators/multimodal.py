@@ -4,10 +4,10 @@ Images/audio/video ride as opaque ``binary`` columns with a typed
 ``meta`` struct (schemas.MULTIMODAL). The Spark-side plumbing — schema,
 partition-friendly batch shape, Arrow-batched ``mapInPandas`` UDF
 signatures — is real and tested; the actual codec step is STUBBED
-(this container has no image/audio libraries): ``decode_features``
-computes deterministic fake features from the bytes themselves, and
-``decode_image`` raises ``NotImplementedError`` where PIL/ffmpeg would
-plug in.
+(no image/audio libraries are assumed): ``extract_features`` computes
+deterministic fake features from the bytes themselves
+(``_fake_features``), which is where a PIL/ffmpeg encoder would plug
+in.
 
 Scale notes: payloads dominate row size, so operators that don't need
 bytes must prune the column (Parquet columnar layout makes that free —
@@ -33,13 +33,6 @@ FEATURE_SCHEMA = (
     "asset_id long, modality string, n_bytes long, sha_prefix string, "
     + ", ".join(f"feat_{i} double" for i in range(N_FEATURES))
 )
-
-
-def decode_image(payload: bytes) -> object:
-    """Real codec hook — requires an image library not present here."""
-    raise NotImplementedError(
-        "image decoding requires PIL/opencv; wire it in here in production"
-    )
 
 
 def _fake_features(payload: bytes, n: int = 4) -> list[float]:
@@ -164,7 +157,7 @@ def image_phash(assets: DataFrame, id_col: str = "asset_id",
 
     The decode step is the honest stub of this module: synthetic
     payloads are UTF-8 bytes read back as char codes (production wires
-    decode_image -> grayscale here); pooling, transform, threshold and
+    an image decoder -> grayscale here); pooling, transform, threshold and
     the banded pairing are the deployable pipeline. The whole hash is
     MAP-SIDE — bucket b covers the contiguous char range
     [ceil(b*L/n), ceil((b+1)*L/n)) (because pos*n div L is monotone in

@@ -135,240 +135,6 @@ def sharpe(
     )
 
 
-def sortino_ratio(
-    rets: DataFrame,
-    periods_per_year: float = 252.0,
-    entity_col: str = "stock_ticker",
-) -> DataFrame:
-    """Annualized Sortino per entity → ``(entity, n_days, mean_ppm,
-    downside_ppm, sortino_ann)`` (6dp) — :func:`sharpe`'s
-    asymmetric-risk companion (built r16, staged for r18): volatility
-    in the denominator is replaced by the DOWNSIDE semideviation
-    ``sqrt(Σ min(ret,0)² / n)`` (target 0, population form), so upside
-    variance stops being punished — the ranking metric a curation /
-    strategy-selection pass actually wants when return distributions
-    are skewed.
-
-    The sharpe float discipline verbatim: S = Σ ret and
-    Qd = Σ min(ret,0)² are exact integer sums (< 2^53, their doubles
-    exact); mean, downside deviation, and the ratio derive from
-    (S, Qd, n) in one pinned association, ROUND 6 at the end —
-    bit-identical cross-engine, no parallel-float ambiguity. Entities
-    with < 2 returns or zero downside (no negative return — the ratio
-    is undefined/infinite) drop.
-
-    Scale: one map-side-combined three-moment aggregate per entity —
-    no window, no join, linear in rows.
-    """
-    neg = F.when(F.col("ret_ppm") < 0, F.col("ret_ppm")).otherwise(
-        F.lit(0).cast("bigint")
-    )
-    agg = rets.groupBy(entity_col).agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum("ret_ppm").cast("double").alias("s"),
-        F.sum(neg * neg).cast("double").alias("qd"),
-    )
-    base = (
-        agg.filter((F.col("n_days") >= 2) & (F.col("qd") > 0))
-        .select(
-            entity_col,
-            "n_days",
-            (F.col("s") / F.col("n_days")).alias("mean_raw"),
-            F.sqrt(F.col("qd") / F.col("n_days")).alias("dd_raw"),
-        )
-    )
-    return base.select(
-        entity_col,
-        "n_days",
-        F.round("mean_raw", 6).alias("mean_ppm"),
-        F.round("dd_raw", 6).alias("downside_ppm"),
-        F.round(
-            (F.col("mean_raw") / F.col("dd_raw"))
-            * F.sqrt(F.lit(periods_per_year)),
-            6,
-        ).alias("sortino_ann"),
-    )
-
-
-def omega_ratio(
-    rets: DataFrame,
-    entity_col: str = "stock_ticker",
-) -> DataFrame:
-    """Omega ratio at threshold 0 per entity → ``(entity, n_days,
-    gain_ppm_sum, loss_ppm_sum, omega_ppm)`` (built r16, staged for
-    r18): Ω = Σ gains / Σ |losses| over the daily ppm returns — the
-    whole-distribution gain/loss mass ratio (Keating & Shadwick), the
-    member of the risk-adjusted family that needs NO variance, NO
-    sqrt, and therefore emits as a PURE INTEGER: both sums are exact
-    BIGINTs and the ratio is ``gains·1e6 div losses`` (toward-zero
-    integral division, the theil-sen discipline) — bit-identical
-    cross-engine with no float anywhere.
-
-    Entities with no losing day drop (Ω undefined/infinite — the
-    degenerate-denominator rule shared with sharpe/sortino).
-
-    Scale: one map-side-combined aggregate, linear in rows.
-    """
-    gain = F.when(F.col("ret_ppm") > 0, F.col("ret_ppm")).otherwise(
-        F.lit(0).cast("bigint")
-    )
-    loss = F.when(F.col("ret_ppm") < 0, -F.col("ret_ppm")).otherwise(
-        F.lit(0).cast("bigint")
-    )
-    agg = rets.groupBy(entity_col).agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum(gain).cast("bigint").alias("gain_ppm_sum"),
-        F.sum(loss).cast("bigint").alias("loss_ppm_sum"),
-    )
-    return agg.filter(F.col("loss_ppm_sum") > 0).select(
-        entity_col,
-        "n_days",
-        "gain_ppm_sum",
-        "loss_ppm_sum",
-        F.expr("(gain_ppm_sum * 1000000) div loss_ppm_sum").alias(
-            "omega_ppm"
-        ),
-    )
-
-
-def calmar_ratio(
-    prices: DataFrame,
-    entity_col: str = "stock_ticker",
-    date_col: str = "stock_date",
-    value_col: str = "stock_close",
-) -> DataFrame:
-    """Calmar ratio per entity → ``(entity, n_obs, total_ret_ppm,
-    max_dd_ppm, calmar_ppm)`` (built r17, staged for r19) — the
-    drawdown-denominated member of the risk-adjusted family: sharpe
-    divides by volatility (punishes all variance), sortino by downside
-    semideviation (punishes downside variance), Calmar by the MAXIMUM
-    DRAWDOWN — the single worst peak-to-trough loss an allocator would
-    actually have lived through (ref_drawdown's depth number promoted
-    to a ranking denominator).
-
-    PURE INTEGER end to end on the cent-quantized series (the
-    omega/theil-sen discipline — no variance, no sqrt, no libm):
-    ``total_ret_ppm = (vc_last − vc_first)·1e6 div vc_first`` over the
-    date-ordered endpoints, per-row drawdown
-    ``(peak − vc)·1e6 div peak`` against the running cumulative max
-    (both operands nonnegative — truncation direction can't differ),
-    ``max_dd_ppm`` its per-entity max, and
-    ``calmar_ppm = total_ret_ppm·1e6 div max_dd_ppm`` (toward-zero
-    integral division both engines, negative-safe for losing
-    tickers). This is the period form (no annualization exponent —
-    a root would put libm on the result; callers annualize outside
-    the exact core if they must). Entities that never draw down
-    (monotone non-decreasing series: max_dd_ppm = 0, ratio
-    undefined/infinite) drop — the degenerate-denominator rule shared
-    with sharpe/sortino/omega.
-
-    Scale: one per-entity window sort computes the running peak AND
-    both endpoint structs in the same frame's partitioning, then one
-    map-side-combined aggregate — no join, no pair space, linear in
-    rows.
-    """
-    base = _trend_base(prices, entity_col, date_col, value_col)
-    w = Window.partitionBy("e").orderBy("d").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    staged = base.select(
-        "e",
-        "vc",
-        F.struct(F.col("d"), F.col("vc")).alias("dv"),
-        F.max("vc").over(w).alias("pk"),
-    )
-    agg = (
-        staged.select(
-            "e",
-            "dv",
-            F.expr(
-                "((cast(pk as decimal(19,0)) - vc) * 1000000) div pk"
-            ).cast("bigint").alias("dd_ppm"),
-        )
-        .groupBy("e")
-        .agg(
-            F.count(F.lit(1)).alias("n_obs"),
-            F.min("dv").alias("first_dv"),
-            F.max("dv").alias("last_dv"),
-            F.max("dd_ppm").alias("max_dd_ppm"),
-        )
-    )
-    return (
-        agg.filter(F.col("max_dd_ppm") > 0)
-        .select(
-            F.col("e").alias(entity_col),
-            "n_obs",
-            F.expr(
-                "((cast(last_dv.vc as decimal(19,0)) - first_dv.vc)"
-                " * 1000000) div first_dv.vc"
-            ).cast("bigint").alias("total_ret_ppm"),
-            "max_dd_ppm",
-        )
-        .withColumn(
-            "calmar_ppm",
-            F.expr(
-                "(cast(total_ret_ppm as decimal(19,0)) * 1000000)"
-                " div max_dd_ppm"
-            ).cast("bigint"),
-        )
-    )
-
-
-def ulcer_index(
-    prices: DataFrame,
-    entity_col: str = "stock_ticker",
-    date_col: str = "stock_date",
-    value_col: str = "stock_close",
-) -> DataFrame:
-    """Ulcer index per entity → ``(entity, n_obs, msdd_ppm2,
-    ulcer_ppm)`` (built r17, staged for r20) — drawdown RISK as a
-    magnitude, not a worst case: calmar_ratio divides by the single
-    deepest drawdown; the Ulcer index is the root-mean-SQUARE of the
-    per-day drawdown, so it charges for how DEEP and how LONG the
-    account sat under water (a 2-week 30% crash and a 2-year 30%
-    grind read identically in max-drawdown; the Ulcer index tells
-    them apart — Martin & McCann's retracement risk measure).
-
-    Exactness: per-row drawdown ppm is the calmar_ratio integer
-    ``(peak − vc)·1e6 div peak`` (both operands nonnegative), the
-    mean of squares ``msdd_ppm2 = Σ dd_ppm² div n`` is one integral
-    division over an exact BIGINT sum (dd_ppm ≤ 1e6 so each square
-    ≤ 1e12 — exact past 9e6 rows per entity), and the index itself is
-    ``ulcer_ppm = floor(sqrt(msdd_ppm2) + 0.5)`` — ONE libm call on a
-    bit-identical integer-derived double, mode-stable rounding (the
-    acf_ppm quantization discipline; sqrt is correctly rounded in
-    both engines, so the result is deterministic cross-engine).
-
-    Scale: one per-entity window sort (the running peak), one
-    map-side-combined aggregate — no join, no pair space, linear.
-    """
-    base = _trend_base(prices, entity_col, date_col, value_col)
-    w = Window.partitionBy("e").orderBy("d").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    dd = base.withColumn("pk", F.max("vc").over(w)).select(
-        "e",
-        F.expr(
-            "((cast(pk as decimal(19,0)) - vc) * 1000000) div pk"
-        ).cast("bigint").alias("dd_ppm"),
-    )
-    return (
-        dd.groupBy("e")
-        .agg(
-            F.count(F.lit(1)).alias("n_obs"),
-            F.sum(F.col("dd_ppm") * F.col("dd_ppm")).alias("sq"),
-        )
-        .select(
-            F.col("e").alias(entity_col),
-            "n_obs",
-            F.expr("sq div n_obs").cast("bigint").alias("msdd_ppm2"),
-            F.floor(
-                F.sqrt(F.expr("sq div n_obs").cast("double")) + F.lit(0.5)
-            ).cast("bigint").alias("ulcer_ppm"),
-        )
-    )
-
-
 def longest_positive_streak(
     rets: DataFrame,
     entity_col: str = "stock_ticker",

@@ -1065,269 +1065,3 @@ def kruskal_wallis_from_counts(counts: DataFrame, value_col: str,
             ).cast("bigint").alias("h_tie_micro"),
         )
     )
-
-
-def mood_median_drift(df: DataFrame, value_col: str,
-                      group_col: str) -> DataFrame:
-    """Mood's median test over ALL groups at once → ONE row
-    ``(n_groups, n_obs, grand_median, n_above, chi2_micro)`` — built
-    r16, staged for r18: the K-group location test that completes the
-    drift family's robustness ladder. Kruskal-Wallis reads the full
-    rank structure (powerful, but one far-tail source can carry it);
-    Mood's test dichotomizes every observation at the POOLED grand
-    median — "does each source put the expected share of its mass
-    above the corpus median?" — the maximally outlier-resistant gate
-    (a document of any absurd length counts exactly once, above).
-
-    Exact integer form on the shared counts grid: the grand median is
-    the pooled lower-median order statistic (cumulative value-domain
-    counts, the VaR/theil-sen discrete rule — never interpolated);
-    with ``a_g`` = group mass strictly above it, ``A = Σ a_g``,
-    ``B = N − A``, the 2×K chi-square collapses to
-
-        chi² = Σ_g (a_g·N − n_g·A)² / (n_g · A · B)
-
-    (both table cells of a group share the same integer deviation
-    ``d_g = a_g·N − n_g·A`` up to sign). Emitted as ``chi2_micro`` via
-    per-group integral division (``(d_g²·1e6) div n_g``, truncation ≤ 1
-    micro-unit per group) and one final division by A·B — the
-    kruskal_wallis emission discipline, DECIMAL(38,0) intermediates
-    (d_g² ≤ n_g²·N² — exact to ~1e10 pooled rows), no doubles, no libm.
-
-    Degenerate splits (A = 0 or B = 0 — everything on one side of the
-    median, chi² undefined) are excluded by the final guard.
-
-    Scale posture identical to kruskal_wallis_drift: one counts
-    shuffle, one value-domain cumulative pass (domain-bounded), one
-    group aggregate, 1-row broadcasts — never a pair join, never a
-    grid. Same mergeable (group, value) counts state as
-    KS/PSI/EMD/CUSUM/MW/JT/KW — an eventual streaming twin is one
-    `_drained_counts_monitor` call.
-    """
-    counts = (
-        df.filter(F.col(group_col).isNotNull() & F.col(value_col).isNotNull())
-        .groupBy(group_col, value_col)
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return mood_median_from_counts(counts, value_col, group_col)
-
-
-def mood_median_from_counts(counts: DataFrame, value_col: str,
-                            group_col: str) -> DataFrame:
-    """:func:`mood_median_drift` over a pre-aggregated non-null
-    ``(group, value, c)`` counts relation — the same shared mergeable
-    monitoring state as KS/PSI/EMD/CUSUM/MW/Jonckheere/KW."""
-    from pyspark.sql import Window
-
-    dec = "decimal(38,0)"
-    vals = counts.groupBy(value_col).agg(F.sum("c").alias("v_cnt"))
-    w_cum = Window.orderBy(value_col).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = vals.withColumn("cum", F.sum("v_cnt").over(w_cum))
-    tot = cum.agg(
-        F.sum("v_cnt").alias("n"),
-    ).withColumn("tgt", F.expr("(n + 1) div 2"))
-    med = (
-        cum.crossJoin(F.broadcast(tot))
-        .filter(F.col("cum") >= F.col("tgt"))
-        .agg(F.min(value_col).alias("grand_median"))
-    )
-    per_g = (
-        counts.crossJoin(F.broadcast(med))
-        .groupBy(group_col)
-        .agg(
-            F.sum("c").alias("n_g"),
-            F.sum(
-                F.when(F.col(value_col) > F.col("grand_median"),
-                       F.col("c")).otherwise(F.lit(0).cast("bigint"))
-            ).alias("a_g"),
-            F.first("grand_median").alias("grand_median"),
-        )
-    )
-    stats = per_g.agg(
-        F.count(F.lit(1)).alias("n_groups"),
-        F.sum("n_g").alias("n_obs"),
-        F.sum("a_g").alias("n_above"),
-        F.first("grand_median").alias("grand_median"),
-    )
-    terms = (
-        per_g.crossJoin(
-            F.broadcast(stats.select(
-                F.col("n_obs").alias("nn"), F.col("n_above").alias("aa")
-            ))
-        )
-        .select(
-            F.lit(1).alias("__one"),
-            # d_g = a_g·N − n_g·A; per-group integral division by n_g
-            F.expr(
-                f"((cast(a_g as {dec}) * nn - cast(n_g as {dec}) * aa)"
-                f" * (cast(a_g as {dec}) * nn - cast(n_g as {dec}) * aa)"
-                f" * 1000000) div n_g"
-            ).alias("tg"),
-        )
-        .groupBy("__one")
-        .agg(F.sum(F.col("tg").cast(dec)).alias("s"))
-    )
-    return (
-        stats.withColumn("__one", F.lit(1))
-        .join(terms, "__one")
-        .filter(
-            (F.col("n_above") > 0) & (F.col("n_above") < F.col("n_obs"))
-        )
-        .select(
-            "n_groups",
-            "n_obs",
-            "grand_median",
-            "n_above",
-            F.expr(
-                f"s div (cast(n_above as {dec})"
-                f" * (n_obs - n_above))"
-            ).cast("bigint").alias("chi2_micro"),
-        )
-    )
-
-
-def cvm_drift(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
-    """Exact two-sample Cramér-von Mises drift per group vs the REST of
-    the corpus → ``(group, n_docs, t_micro, msq_gap_ppm)`` (built r17,
-    staged for r19) — the L2 member of the CDF-gap family: KS reads the
-    MAXIMUM pointwise CDF gap (one bad value decides), CvM integrates
-    the SQUARED gap over the whole pooled sample — sensitive to many
-    small deviations spread across the distribution that KS's single
-    max never sees (the classic KS blind spot: a source whose lengths
-    are shifted a little EVERYWHERE, never much anywhere).
-
-    Integer end to end on the counts grid: at each distinct value v the
-    scaled CDF gap ``d(v) = cum_g(v)·n_rest − cum_rest(v)·n_g`` is an
-    exact integer (the ks_drift quantity before the abs/max), and the
-    pooled-measure integral is ``S = Σ_v v_cnt·d(v)²``. Emitted as
-
-    - ``t_micro = S·1e6 div (N²·n_g·n_rest)`` — exactly 1e6× the
-      classical two-sample statistic T = Σ w·(F_g − F_rest)²·
-      (n_g·n_rest/N²) under the pooled empirical weight w = v_cnt/N,
-      and
-    - ``msq_gap_ppm = S·1e6 div (N·n_g²·n_rest²)`` — the mean squared
-      CDF gap in ppm (0 = identical, 1e6 = disjoint supports), the
-      bounded effect-size companion (what rank_biserial is to U).
-
-    DECIMAL(38,0) intermediates: S ≤ N·(n_g·n_rest)² — exact to ~1e7
-    rows per side before DEC38/HUGEINT saturate (both engines share
-    the bound; widen both past that). Integral division toward zero in
-    both engines; all operands nonnegative. Degenerate splits
-    (n_g = N: no rest) are excluded like ks_drift.
-
-    Scale posture identical to ks_drift: one map-side-combined counts
-    shuffle, then the |groups| × |distinct values| grid — never the
-    corpus, never a pair join. Same mergeable (group, value) counts
-    state as KS/PSI/EMD/CUSUM/MW/JT/KW/Mood — the streaming twin is
-    one `_drained_counts_monitor` call.
-    """
-    counts = (
-        df.filter(F.col(group_col).isNotNull() & F.col(value_col).isNotNull())
-        .groupBy(group_col, value_col)
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return cvm_from_counts(counts, value_col, group_col)
-
-
-def cvm_from_counts(counts: DataFrame, value_col: str,
-                    group_col: str) -> DataFrame:
-    """:func:`cvm_drift` over a pre-aggregated non-null ``(group,
-    value, c)`` counts relation — the same shared mergeable monitoring
-    state as KS/PSI/EMD/CUSUM/MW/Jonckheere/KW/Mood."""
-    from pyspark.sql import Window
-
-    w_all = Window.orderBy(value_col).rowsBetween(Window.unboundedPreceding, 0)
-    vals = (
-        counts.groupBy(value_col)
-        .agg(F.sum("c").alias("v_cnt"))
-        .withColumn("cum_all", F.sum("v_cnt").over(w_all))
-    )
-    groups = counts.groupBy(group_col).agg(F.sum("c").alias("n_g"))
-    tot = counts.agg(F.sum("c").alias("n"))
-    grid = (
-        groups.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(vals))
-        .join(counts, [group_col, value_col], "left")
-        .withColumn("g_c", F.coalesce(F.col("c"), F.lit(0)))
-    )
-    w_g = Window.partitionBy(group_col).orderBy(value_col).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    dec = "decimal(38,0)"
-    cum_g = F.sum("g_c").over(w_g)
-    # the ks_drift deviation BEFORE abs/max: cum_g·n_rest − cum_rest·n_g
-    d = (
-        cum_g.cast(dec) * (F.col("n") - F.col("n_g")).cast(dec)
-        - (F.col("cum_all") - cum_g).cast(dec) * F.col("n_g").cast(dec)
-    )
-    term = F.col("v_cnt").cast(dec) * d * d
-    return (
-        grid.select(group_col, "n_g", "n", term.alias("tm"))
-        .groupBy(group_col, "n_g", "n")
-        .agg(F.sum("tm").alias("s"))
-        .filter(F.col("n_g") < F.col("n"))  # a lone group has no rest
-        .select(
-            group_col,
-            F.col("n_g").alias("n_docs"),
-            F.expr(
-                "(s * 1000000) div (cast(n as decimal(38,0)) * n"
-                " * n_g * (n - n_g))"
-            ).cast("bigint").alias("t_micro"),
-            F.expr(
-                "(s * 1000000) div (cast(n as decimal(38,0))"
-                " * n_g * n_g * (n - n_g) * (n - n_g))"
-            ).cast("bigint").alias("msq_gap_ppm"),
-        )
-    )
-
-
-def theil_inequality(values: DataFrame, value_col: str) -> DataFrame:
-    """Theil T inequality index over a positive value relation → ONE
-    row ``(n_units, total_value, theil_micro)`` in exact integer
-    micro-nats (built r17, staged for r20) — the DECOMPOSABLE
-    inequality scalar next to gini_concentration: Gini reads rank
-    geometry (and cannot be split by subgroup without a residual);
-    Theil T = (1/n)·Σ (x_i/μ)·ln(x_i/μ) is additively decomposable
-    across any partition (between-group + within-group), which is why
-    monitoring pipelines that later drill into per-region or
-    per-source inequality start from it. Range 0 (perfect equality)
-    to ln(n) (one unit holds everything).
-
-    The kl_source_divergence micro-unit discipline verbatim: with
-    S = Σx and n as exact BIGINTs on a 1-row broadcast, each unit's
-    term ``(x/S)·ln(x·n/S)`` is computed from identical integers
-    through identical correctly-rounded double ops and quantized ONCE
-    (mode-stable ``floor(t·1e6 + 0.5)``, negative-safe — below-mean
-    units contribute negative cells), then the reduction is an exact
-    int64 SUM — no parallel float accumulation. Non-positive units
-    are excluded up front (ln undefined; pinned in the oracle
-    identically).
-
-    Scale: one scan + one map-side-combined 2-moment aggregate for
-    the broadcast, one projection + final sum — linear, no window,
-    no join beyond the 1-row broadcast (the scalar-subquery pattern).
-    """
-    x = values.filter(F.col(value_col) > 0).select(
-        F.col(value_col).cast("bigint").alias("x")
-    )
-    tot = x.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("s"),
-    )
-    xd, nd, sd = (F.col(c).cast("double") for c in ("x", "n", "s"))
-    cell = F.floor(
-        (xd / sd) * F.log((xd * nd) / sd) * F.lit(1000000.0) + F.lit(0.5)
-    ).cast("long")
-    return (
-        x.crossJoin(F.broadcast(tot))
-        .select("n", "s", cell.alias("tc"))
-        .groupBy("n", "s")
-        .agg(F.sum("tc").alias("theil_micro"))
-        .select(
-            F.col("n").alias("n_units"),
-            F.col("s").cast("bigint").alias("total_value"),
-            "theil_micro",
-        )
-    )

@@ -40,13 +40,6 @@ def marker_count(text_col: Column | str, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(tokens(text_col), lambda t: t.isin(*markers)))
 
 
-def lang_scores(text_col: Column | str) -> list[Column]:
-    return [
-        marker_count(text_col, m).alias(f"score_{lang}")
-        for lang, m in LANG_MARKERS.items()
-    ]
-
-
 def lang_id(text_col: Column | str) -> Column:
     """Predicted language: argmax of marker counts, first-wins on ties
     (stable language order), 'und' when no marker hits at all."""
@@ -1467,219 +1460,5 @@ def kl_source_divergence(df: DataFrame, id_col: str = "doc_id",
             F.col("ns").alias("n_tokens"),
             "n_terms",
             "kl_micro",
-        )
-    )
-
-
-def heaps_law(df: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id", n_buckets: int = 16) -> DataFrame:
-    """Vocabulary saturation curve (Heaps' law) → one row per ingest
-    bucket ``(bucket, n_docs_cum, n_tokens_cum, n_terms_cum)`` — built
-    r16, staged for r18: how fast the DISTINCT vocabulary grows as the
-    corpus accumulates. The curation planning signal behind "is more
-    of this source still adding new language?": a saturating curve
-    (vocab ~ tokens^β flattening) says additional documents are
-    re-hashes of known vocabulary — the corpus-level complement of
-    per-document ngram_novelty, and the empirical basis for
-    tokenizer-vocabulary sizing.
-
-    Ingest order: id order stands in for arrival order (the
-    ngram_novelty convention — deterministic and incremental). Buckets
-    are FIXED id-range slices (bucket k covers ids in
-    [min + k·span, ...), span = (max−min+1)/n_buckets rounded up) —
-    one 1-row min/max broadcast, NO global row sort (a row_number
-    ranking would single-task the corpus; uneven id density just makes
-    uneven buckets, which the emitted cumulative token counts expose
-    honestly).
-
-    The cumulative-distinct trick: a term contributes to the
-    vocabulary from its FIRST bucket onward, so n_terms_cum(k) =
-    #{terms: min_bucket(term) ≤ k} — one min-aggregate over the
-    exploded (term, bucket) pairs, one n_buckets-row cumulative
-    window. Never a per-bucket distinct-union rescan. Integer end to
-    end.
-
-    Scale: explode → two partial-aggregated shuffles (term-level min,
-    bucket-level counts) + an n_buckets-row window. Empty input →
-    empty relation.
-    """
-    bounds = df.agg(
-        F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
-    ).withColumn(
-        "span",
-        F.expr(f"(hi - lo + {n_buckets}) div {n_buckets}"),
-    )
-    toks = F.filter(tokens(text_col), lambda t: t != "")
-    bucketed = (
-        df.crossJoin(F.broadcast(bounds))
-        .select(
-            F.expr(f"({id_col} - lo) div span").cast("int").alias("bucket"),
-            F.col(id_col).alias("__id"),
-            toks.alias("__toks"),
-        )
-    )
-    per_bucket = bucketed.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size("__toks")).cast("bigint").alias("n_tokens"),
-    )
-    first_bucket = (
-        bucketed.select("bucket", F.explode("__toks").alias("term"))
-        .groupBy("term")
-        .agg(F.min("bucket").alias("fb"))
-        .groupBy("fb")
-        .agg(F.count(F.lit(1)).alias("new_terms"))
-    )
-    w_cum = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return (
-        per_bucket.join(
-            first_bucket.withColumnRenamed("fb", "bucket"), "bucket", "left"
-        )
-        .select(
-            "bucket",
-            "n_docs",
-            "n_tokens",
-            F.coalesce("new_terms", F.lit(0).cast("bigint")).alias("nt"),
-        )
-        .select(
-            "bucket",
-            F.sum("n_docs").over(w_cum).cast("bigint").alias("n_docs_cum"),
-            F.sum("n_tokens").over(w_cum).cast("bigint")
-            .alias("n_tokens_cum"),
-            F.sum("nt").over(w_cum).cast("bigint").alias("n_terms_cum"),
-        )
-    )
-
-
-def source_vocab_overlap(df: DataFrame, text_col: str = "text",
-                         group_col: str = "source") -> DataFrame:
-    """Pairwise vocabulary overlap between sources → ``(source_a,
-    source_b, n_terms_a, n_terms_b, n_shared, jaccard_ppm)`` with
-    ``source_a < source_b`` (built r17, staged for r19) — the
-    source-level twin of the document-level dedup family: KL
-    (llm_kl_source_divergence) asks "how far is this source's token
-    DISTRIBUTION from the corpus"; this asks "which PAIRS of sources
-    speak the same vocabulary at all" — the mix-planning signal for
-    merging near-identical feeds (two scrapes of the same site) and
-    for spotting a source that is a vocabulary subset of another
-    before both pay the document-level dedup pass.
-
-    Pure counting, integer end to end: per-source DISTINCT term sets
-    (the shingle_pair_counts discipline applied at source granularity),
-    ``n_shared`` from one term equi-join with ``source_a < source_b``
-    riding inside it, margins attached from the per-source term
-    counts, ``jaccard_ppm = n_shared·1e6 div (n_a + n_b − n_shared)``
-    by integral division — no floats anywhere, the oracle matches
-    bit-for-bit. Pairs sharing zero terms are absent (the Jaccard-0
-    rows carry no signal and their explicit emission would force the
-    |sources|² grid).
-
-    Scale: the join relation is the VOCABULARY (Zipf-bounded), never
-    the corpus — per-term fan-out is C(k_t, 2) over the k_t ≤
-    |sources| sources containing term t, so the worst case is
-    |vocab|·|sources|²/2 with |sources| small by construction (feeds,
-    not documents). One distinct shuffle, one equi-join, one pair
-    aggregate; margins ride a broadcast-friendly |sources|-row
-    relation (unhinted — AQE converts when it fits).
-    """
-    sets = (
-        df.filter(F.col(group_col).isNotNull())
-        .select(F.col(group_col).alias("g"),
-                F.explode(tokens(text_col)).alias("term"))
-        .filter(F.col("term") != "")
-        .distinct()
-    )
-    sizes = sets.groupBy("g").agg(F.count(F.lit(1)).alias("n_terms"))
-    a = sets.alias("a")
-    b = sets.alias("b")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.term") == F.col("b.term"))
-            & (F.col("a.g") < F.col("b.g")),
-        )
-        .groupBy(
-            F.col("a.g").alias("source_a"),
-            F.col("b.g").alias("source_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.select(F.col("g").alias("source_a"),
-                      F.col("n_terms").alias("n_terms_a"))
-    sb = sizes.select(F.col("g").alias("source_b"),
-                      F.col("n_terms").alias("n_terms_b"))
-    return (
-        shared.join(sa, "source_a")
-        .join(sb, "source_b")
-        .select(
-            "source_a",
-            "source_b",
-            "n_terms_a",
-            "n_terms_b",
-            "n_shared",
-            F.expr(
-                "(n_shared * 1000000)"
-                " div (n_terms_a + n_terms_b - n_shared)"
-            ).alias("jaccard_ppm"),
-        )
-    )
-
-
-def term_burstiness(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    min_count: int = 5) -> DataFrame:
-    """Per-term burstiness (variance-to-mean ratio of the per-document
-    count, zeros included) → ``(term, n_docs_with, total_count,
-    vmr_micro)`` for terms with ``total_count ≥ min_count`` (built
-    r17, staged for r20) — the dispersion diagnostic on the
-    vocabulary: a Poisson-scattered term has VMR ≈ 1; topical/bursty
-    terms (VMR ≫ 1) concentrate in few documents, boilerplate (VMR
-    ≈ 1 at high frequency) spreads evenly — Church & Gale's
-    burstiness, the signal separating "frequent because templated"
-    from "frequent because a topic dominates", which TF-IDF and the
-    Zipf slope both blur.
-
-    PURE INTEGER: over D documents (the non-null-text count, one
-    1-row broadcast) with per-term S = Σc and Q = Σc² exact BIGINTs
-    (zero-count docs contribute nothing to either),
-    ``VMR = var/mean = (D·Q − S²) / (D·S)`` exactly, emitted as
-    ``vmr_micro = ((D·Q − S²)·1e6) div (D·S)`` in DECIMAL(38,0) —
-    D·Q reaches ~1e9·1e12 at corpus scale, past int64 — with
-    toward-zero integral division (S² > D·Q is possible only when a
-    term appears in every doc more evenly than Poisson; the numerator
-    is then a small negative, negative-safe both engines).
-
-    Scale: one scan + explode, one (doc, term) count aggregate, one
-    per-term 2-moment aggregate (vocab-bounded output), one 1-row
-    broadcast. No window, no join beyond the broadcast, no pair
-    space.
-    """
-    base = df.filter(F.col(text_col).isNotNull())
-    tot = base.agg(F.count(F.lit(1)).alias("d"))
-    cells = (
-        base.select(F.col(id_col).alias("i"),
-                    F.explode(tokens(text_col)).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("i", "term")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    dec = "decimal(38,0)"
-    per_term = cells.groupBy("term").agg(
-        F.count(F.lit(1)).alias("n_docs_with"),
-        F.sum("c").alias("s"),
-        F.sum(F.col("c").cast(dec) * F.col("c").cast(dec)).alias("q"),
-    )
-    return (
-        per_term.filter(F.col("s") >= min_count)
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "term",
-            "n_docs_with",
-            F.col("s").cast("bigint").alias("total_count"),
-            F.expr(
-                f"((cast(d as {dec}) * q - cast(s as {dec}) * s)"
-                f" * 1000000) div (cast(d as {dec}) * s)"
-            ).cast("bigint").alias("vmr_micro"),
         )
     )

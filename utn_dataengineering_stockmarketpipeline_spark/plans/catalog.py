@@ -60,9 +60,8 @@ def _load_all() -> None:
 # greens: r12x16 / r13x50 / r14x50 / r15x50 / r16x50):
 #   1. the 16 remaining r12-green entries (burns the r12 backlog
 #      completely) + the 29 oldest r13-green,
-#   2. (pin = 45 = 50 - 5 planned round-17 registrations — the five
-#      staged operators in tools/r17_staged_oracles.py; re-pin to
-#      50 - planned if the plan changes),
+#   2. (pin = 45 leaves 5 window slots for new registrations, which
+#      land at the pin; re-pin to 50 - planned if more are planned),
 #   3. the remaining 21 r13-green head the tail (first into the
 #      r18 window), then r14-green, r15-green, and the 50 round-16
 #      window entries (freshest evidence, safely outside).
@@ -294,7 +293,7 @@ _DRIVER_ORDER: tuple[str, ...] = (
 
 
 # New (unlisted) queries slot in after the must-verify head.
-# 45 + 5 planned round-17 registrations = the full 50-query window.
+# 45 + up to 5 new registrations = the full 50-query window.
 _WINDOW_PIN = 45
 
 

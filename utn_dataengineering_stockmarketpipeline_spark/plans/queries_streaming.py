@@ -348,9 +348,7 @@ FROM events GROUP BY user_id
     doc="per-key streaming quota admission: each user admits at most "
         "5 events, the rest count as dropped — multi-tenant flood "
         "control ahead of enrichment. One bigint of state per key "
-        "(applyInPandasWithState; the Spark-4 StatefulProcessor twin "
-        "stateful_quota_admission_tws is import-gated — its protobuf "
-        "worker dependency is absent from this container); admitted/"
+        "(applyInPandasWithState); admitted/"
         "dropped are monotone in the running count, so the final "
         "update-mode row per key equals the batch LEAST/GREATEST "
         "truth regardless of arrival order or batch split (the oracle)",

@@ -26,7 +26,7 @@ the shuffle partition that owns the key.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -226,9 +226,7 @@ def stateful_quota_admission(
     State is ONE bigint counter per key (``applyInPandasWithState``),
     co-located with the key's shuffle partition and
     checkpoint-persisted; at 100 TB the state size is O(distinct
-    keys), independent of event volume. The Spark-4 StatefulProcessor
-    form of the same operator is
-    :func:`stateful_quota_admission_tws`.
+    keys), independent of event volume.
     """
 
     def update(
@@ -259,85 +257,6 @@ def stateful_quota_admission(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def stateful_quota_admission_tws(
-    stream: DataFrame, key_col: str = "user_id", k: int = 5
-) -> DataFrame:
-    """:func:`stateful_quota_admission` on Spark 4's
-    ``transformWithStateInPandas`` (the StatefulProcessor API that
-    supersedes applyInPandasWithState — named state handles, timers,
-    TTL, multiple state variables per key).
-
-    GATED, not registered as a driver query: the API's state-server
-    protocol needs ``google.protobuf`` in the Python workers, which is
-    verifiably absent from this container (and installs are out of
-    scope) — calling raises ImportError with that explanation, and the
-    pytest twin skips when protobuf is missing. Identical semantics to
-    the registered operator by construction, so environments WITH
-    protobuf verify it against the same oracle.
-    """
-    try:
-        import google.protobuf  # noqa: F401  (worker-side requirement)
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf in the "
-            "Python workers (state-server protocol); it is not installed "
-            "in this container — use stateful_quota_admission "
-            "(applyInPandasWithState, same semantics) instead"
-        ) from e
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class Quota(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState("seen", "n BIGINT")
-
-        def handleInputRows(self, key, rows, timer_values):
-            n = self._seen.get()[0] if self._seen.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._seen.update((n,))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_admitted": [min(k, n)],
-                    "n_dropped": [max(n - k, 0)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.select(F.col(key_col).cast("long").alias("user_id"))
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            Quota(),
-            outputStructType=_QUOTA_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def run_to_memory(
-    stream: DataFrame,
-    query_name: str,
-    output_mode: str = "complete",
-) -> None:
-    """Drain an availableNow stream into the in-memory sink
-    (``spark.table(query_name)`` afterwards). Test/demo helper — the
-    memory sink collects to the driver and is not a production sink.
-    """
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def quarantine_sink(
