@@ -206,14 +206,14 @@ def test_lake_roundtrip_partition_layout_and_compaction(spark, tmp_path):
     batch = normalize_stock_payload(
         json_rows_to_df(spark, _calendar("2024-01-15", days), STOCK_RAW), "AAA"
     )
-    lake.write_stocks(batch, path)
-    lake.write_stocks(  # second ticker, same layout
+    lake.write_stocks(  # second ticker first: appends arrive out of order
         normalize_stock_payload(
             json_rows_to_df(spark, _calendar("2024-01-15", days), STOCK_RAW),
             "BBB",
         ),
         path,
     )
+    lake.write_stocks(batch, path)
 
     import os
 
@@ -253,6 +253,23 @@ def test_lake_roundtrip_partition_layout_and_compaction(spark, tmp_path):
         m: 1 for m in months
     }
 
+    import pyarrow.parquet as pq
+
+    def assert_files_sorted():
+        # every compacted file keeps write_stocks' (ticker, date) order,
+        # which the row-group min/max stats rely on
+        for month_dir, files in leaf_files().items():
+            for f in files:
+                t = pq.read_table(
+                    os.path.join(path, "stock_year=2024", month_dir, f),
+                    columns=["stock_ticker", "stock_date"],
+                )
+                rows = list(zip(t.column("stock_ticker").to_pylist(),
+                                t.column("stock_date").to_pylist()))
+                assert rows == sorted(rows), f"{month_dir}/{f} unsorted"
+
+    assert_files_sorted()
+
     # a small target splits each leaf into ceil(rows/target) files
     per_leaf = {
         f"stock_month={r['stock_month']}": r["count"]
@@ -266,6 +283,7 @@ def test_lake_roundtrip_partition_layout_and_compaction(spark, tmp_path):
     }
     again = lake.read_lake(spark, path)
     assert sorted(r["stock_key"] for r in again.select("stock_key").collect()) == keys
+    assert_files_sorted()
 
 
 def test_scd2_idempotent_and_versions(spark):

@@ -129,17 +129,26 @@ def test_hits_shuffle_regime_matches_broadcast_regime(spark, monkeypatch):
 
 
 def test_pagerank_and_lpa_regime_layouts_are_equivalent(spark, monkeypatch):
-    """pagerank keys its weighted-edge cache by dst (broadcast regime)
-    or src (shuffle regime), LPA keys its undirected relation by 'a' or
-    'b' — the layouts must not change any value (pagerank compared
-    after the oracle's ROUND(9))."""
+    """Every size-gated graph loop gives the same values with its gate
+    forced the other way. pagerank keys its weighted-edge cache by dst
+    (broadcast regime) or src (shuffle regime), LPA keys its undirected
+    relation by 'a' or 'b', and the Bellman-Ford loop (shortest path
+    and bfs_hops on it) broadcasts its distance vector or not — all
+    under GRAPH_BROADCAST_NODES (pagerank compared after the oracle's
+    ROUND(9)). kcore_peel broadcasts each sweep's removed set or
+    semi-joins it by shuffle, under KCORE_BROADCAST_REMOVED; on the
+    hand graph the first sweep peels the pendants C6 and C7 and the
+    second peels C5."""
     from utn_dataengineering_stockmarketpipeline_spark.operators import graph
 
-    edges = spark.createDataFrame(
-        [("C1", "S1"), ("C2", "S1"), ("C1", "S2"), ("C3", "S2"),
-         ("C3", "S3"), ("C2", "S3"), ("C4", "S1"), ("C4", "S3")],
-        "src string, dst string",
+    weighted = spark.createDataFrame(
+        [("C1", "S1", 3), ("C2", "S1", 1), ("C1", "S2", 1), ("C3", "S2", 2),
+         ("C3", "S3", 1), ("C2", "S3", 5), ("C4", "S1", 2), ("C4", "S3", 1),
+         ("C5", "S1", 1), ("C6", "C5", 4), ("C7", "S2", 1)],
+        "src string, dst string, w int",
     )
+    edges = weighted.select("src", "dst")
+    seeds = spark.createDataFrame([("C1",)], "node string")
 
     def pr_rows():
         return sorted(
@@ -147,10 +156,26 @@ def test_pagerank_and_lpa_regime_layouts_are_equivalent(spark, monkeypatch):
             for r in graph.pagerank(edges, iters=5).collect()
         )
 
-    def lpa_rows():
-        return _rows(graph.label_propagation(edges, rounds=3))
+    def loop_rows():
+        return (
+            pr_rows(),
+            _rows(graph.label_propagation(edges, rounds=3)),
+            _rows(graph.shortest_path_weighted(weighted, seeds, max_rounds=4)),
+            _rows(graph.bfs_hops(edges, seeds, max_hops=2)),
+        )
 
-    pr_small, lpa_small = pr_rows(), lpa_rows()
+    def kcore_rows():
+        return _rows(graph.kcore_peel(edges, k=2, rounds=3))
+
+    broadcast, kcore_broadcast = loop_rows(), kcore_rows()
+    # the inputs exercise the loops: weighted distances over three
+    # edges, a node beyond bfs' 2-hop bound, and a two-sweep peel
+    assert ("C5", "4") in broadcast[2] and ("C6", "8") in broadcast[2]
+    assert all(r[0] != "C6" for r in broadcast[3])
+    assert [r[0] for r in kcore_broadcast] == [
+        "C1", "C2", "C3", "C4", "S1", "S2", "S3",
+    ]
     monkeypatch.setattr(graph, "GRAPH_BROADCAST_NODES", 0)
-    assert pr_rows() == pr_small
-    assert lpa_rows() == lpa_small
+    assert loop_rows() == broadcast
+    monkeypatch.setattr(graph, "KCORE_BROADCAST_REMOVED", 0)
+    assert kcore_rows() == kcore_broadcast

@@ -1,28 +1,50 @@
-"""Iterative graph analytics (PageRank) — the fixed-point iteration
-class beyond connected components (dedup.duplicate_clusters).
+"""Iterative graph analytics over DataFrame edge lists — the
+fixed-iteration and bounded-relaxation classes beyond connected
+components (dedup.duplicate_clusters):
 
-PageRank here is the Pregel shape expressed in DataFrames: one shuffle
-per iteration (contributions grouped by destination), the rank vector
-joined back to the edge list. Spark's native GraphX/Pregel is
-JVM-Scala-only; the DataFrame formulation keeps the plan visible to
-Catalyst/AQE and scales the same way (edges partitioned by src, ranks
-by node).
+- :func:`pagerank` and :func:`hits`: prestige scores over a directed
+  edge list;
+- :func:`shortest_path_weighted`: bounded Bellman-Ford distances from
+  a seed set over an undirected edge list; :func:`bfs_hops` is the same
+  loop with unit weights;
+- :func:`label_propagation`: bounded synchronous LPA communities;
+- :func:`kcore_peel`: bounded k-core peeling;
+- :func:`triangle_stats`: a one-pass triangle census (no loop).
+
+Every loop is the Pregel shape expressed in DataFrames: the edge list
+is laid out by its join key once, and each round joins the node-sized
+vector to it and aggregates by the other endpoint. Spark's native
+GraphX/Pregel is JVM-Scala-only; the DataFrame formulation keeps the
+plan visible to Catalyst/AQE and scales the same way.
+
+Loop set-up has one home: :func:`_loop_parts` sizes every loop's
+shuffle width, and :func:`_directed` builds the persisted edge
+projection and node inventory that pagerank and hits start from. The
+round bodies stay separate because they materialize rounds in
+different ways: pagerank chains lazily, the Bellman-Ford loop
+checkpoints eagerly, LPA checkpoints lazily and hits rescales on the
+driver.
 
 Determinism contract: a FIXED iteration count, no convergence RNG, so
-any engine that runs the same algebra reproduces the values up to float
-summation order (the catalog oracle unrolls the same 10 iterations in
-SQL and compares after a ROUND).
+any engine that runs the same algebra reproduces the values (the
+catalog oracles unroll the same rounds in SQL; pagerank compares after
+a ROUND, the integer operators exactly).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Iteration bound: PageRank error contracts by the damping factor per
 #: round, so 10 rounds ≈ 0.85^10 ≈ 0.2 residual of the start gap —
 #: plenty for ranking/curation uses; raise for scientific use.
 DEFAULT_ITERS = 10
+
+#: pagerank's rounds chain lazily; a ``localCheckpoint`` every this many
+#: rounds bounds plan depth and compile time (measured r7 at sf0.1:
+#: every-round checkpointing 17.9 s → 10.4 s warm at 5).
+PAGERANK_CHECKPOINT_EVERY = 5
 
 #: kcore_peel broadcasts a sweep's newly-removed node set into the
 #: delta-degree join when it is at most this many rows (~30 MB of
@@ -121,66 +143,72 @@ def _encode_edges(e: DataFrame, mapping: DataFrame, broadcast_map: bool,
     )
 
 
+def _loop_parts(spark: SparkSession, rows: int) -> int:
+    """Shuffle width of a loop whose per-round join reads ``rows`` edge
+    rows: ~75k rows per partition, at least 4, capped at the session's
+    ``spark.sql.shuffle.partitions``.
+
+    Each loop pins this width PER PLAN with explicit repartitions — not
+    by mutating the session-global setting, which leaks to concurrent
+    queries and races on restore. It scales with EDGES, not nodes:
+    per-round work is the edge⋈vector join, so ~75k edges/partition
+    keeps tasks busy without drowning a small graph in task overhead
+    (measured on pagerank at sf0.1: 587k edges → 8 parts 5.6 s vs
+    8.0 s at the old node-derived 4; 5.9M edges → 32 parts 14 s vs
+    25 s). At real graph scale the session width wins.
+    """
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(4, min(session_parts, -(-rows // 75_000)))
+
+
+def _directed(edges: DataFrame, src: str, dst: str):
+    """The persisted ``(src, dst)`` projection and its persisted
+    distinct node inventory, each counted once → ``(e, m, nodes, n)``.
+
+    The node inventory and every later build (degree table, node
+    mapping, edge layouts) read the cache; without the persist each
+    re-derives the caller's upstream — often a join + distinct — from
+    scratch. The caller unpersists both.
+    """
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")
+                     ).persist()
+    m = e.count()
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .unionAll(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .persist()
+    )
+    return e, m, nodes, nodes.count()
+
+
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              iters: int = DEFAULT_ITERS,
-             damping: float = 0.85,
-             checkpoint_every: int = 5,
-             loop_parts: int | None = None) -> DataFrame:
+             damping: float = 0.85) -> DataFrame:
     """PageRank over a directed edge list → (node, rank).
 
     Simple-leak variant: dangling nodes (no out-edges) absorb rank
     without redistributing it — the common simplification when ranks
     are used ordinally (dedup survivor choice, crawl prioritization).
 
-    Plan per iteration: edges ⋈ ranks on src (one hash shuffle —
-    edges re-shuffle each round; at 100 TB pre-partition the edge list
-    by src ONCE and the join reuses that layout), contributions
-    partial-aggregate by dst, a left join pulls isolated/no-inbound
-    nodes back in at the teleport floor.
+    Plan per iteration: edges ⋈ ranks on src, contributions
+    aggregated by dst, a left join pulls isolated/no-inbound nodes
+    back in at the teleport floor.
 
     Unlike duplicate_clusters (whose CONVERGENCE TEST needs an action
     per round), the iteration count here is fixed — so rounds chain
     lazily into ONE job and Catalyst plans the whole 10-round DAG
     at once. ``localCheckpoint`` fires only every
-    ``checkpoint_every`` rounds to bound plan depth/compile time
-    (measured r7 at sf0.1: every-round checkpointing 17.9 s → 10.4 s
-    warm with checkpoint_every=5; the remaining cost is ~30
-    fixed-overhead stages, inherent to 10 chained shuffle rounds on a
-    16k-node graph — at real scale per-stage work dominates that
-    overhead).
+    :data:`PAGERANK_CHECKPOINT_EVERY` rounds to bound plan depth; the
+    remaining cost at small scale is ~30 fixed-overhead stages,
+    inherent to 10 chained shuffle rounds — at real scale per-stage
+    work dominates that overhead.
     """
-    # Persisted once: the raw edge projection feeds the node inventory,
-    # the out-degree table, AND the weighted edge build — without the
-    # persist each re-derives the caller's upstream (often a join +
-    # distinct) from scratch.
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")
-                     ).persist()
-    m = e.count()
-    nodes_raw = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes_raw.count()
+    e, m, nodes_raw, n = _directed(edges, src, dst)
     if n == 0:
         e.unpersist()
         return nodes_raw.withColumn("rank", F.lit(None).cast("double"))
-    # Loop shuffle width is pinned PER PLAN with explicit repartition —
-    # not by mutating the session-global spark.sql.shuffle.partitions
-    # (which leaks to concurrent queries and races on restore). Width
-    # scales with EDGES, not nodes: per-round work is the edge⋈rank
-    # join, so ~75k edges/partition keeps tasks busy without drowning
-    # a small graph in task overhead (measured at sf0.1: 587k edges →
-    # 8 parts 5.6 s vs 8.0 s at the old node-derived 4; 5.9M edges →
-    # 32 parts 14 s vs 25 s). Capped at the session setting — at real
-    # graph scale the session width wins and the scoping is a no-op.
-    spark = edges.sparkSession
-    if loop_parts is None:
-        session_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        loop_parts = max(4, min(session_parts, -(-m // 75_000)))
+    loop_parts = _loop_parts(edges.sparkSession, m)
     # SMALL-VECTOR regime (r18, the HITS/LPA treatment): under
     # GRAPH_BROADCAST_NODES the per-round rank join broadcasts the
     # rank vector (the cached weighted-edge relation is read as-is —
@@ -202,11 +230,6 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # outright (§2.4). On the shuffle path src stays the key: there
     # the rank join is the exchange to avoid, and the aggregate pays
     # its own repartition as before.
-    # (BIGINT loop encoding was built and interleaved-A/B'd here in r19:
-    # pagerank measured 4.84 vs 7.5-8.3 s WITH the encode at sf0.1 —
-    # the mapping build + boundary joins + exit decode cost more than
-    # the narrower lazy-chained rounds save; hits, whose rounds are
-    # eager and job-bound, keeps the encode. See OPTIMIZATION_r19.md.)
     we = e.join(outdeg, "src").repartition(
         loop_parts, "dst" if small_vec else "src"
     ).persist()
@@ -239,7 +262,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         )
         if it == 0:
             _capture_round_plan("pagerank round (lazy-chained)", ranks)
-        if (it + 1) % checkpoint_every == 0 and it + 1 < iters:
+        if (it + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and it + 1 < iters:
             ranks = ranks.localCheckpoint()
     # eager final checkpoint so the persisted inputs can release NOW —
     # returning a lazy tail over unpersisted inputs would recompute them
@@ -262,91 +285,22 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 4,
     ("everything within k hops of the contaminated source"), curation
     neighborhood expansion.
 
-    Expressed as bounded Bellman-Ford relaxation rather than
-    frontier/anti-join BFS: ``d_k = min(d_{k-1}, 1 + d_{k-1} ⋈ edges)``
-    per round, which is pure join + union + groupBy-MIN on INTEGER
-    hops — no anti-join state, deterministic on any engine, and it
-    unrolls to SQL CTEs verbatim (the pagerank-oracle discipline).
-    Unlike :func:`pagerank` (each round references the rank vector
-    once), each relaxation references its predecessor TWICE, so rounds
-    checkpoint eagerly instead of chaining lazily — see the loop
-    comment. The edge list is made undirected and persisted once.
-
-    Plan per round: reached ⋈ edges on the source key (one hash
-    shuffle), union with the carried distances, partial-agg MIN by
-    node. At 100 TB: edges pre-partitioned by ``src`` are reused every
-    round; the reached relation is the growing side but shuffles only
-    (node, hops) int pairs. Relaxation visits |frontier's edges| per
-    round like frontier BFS — the union-min just carries settled nodes
-    through the narrow agg instead of maintaining anti-join state.
+    Runs :func:`shortest_path_weighted` with every edge weight 1 — a
+    bounded Bellman-Ford relaxation ``d_k = min(d_{k-1}, 1 + d_{k-1} ⋈
+    edges)`` rather than frontier/anti-join BFS: pure join + union +
+    groupBy-MIN on integer hops, no anti-join state, deterministic on
+    any engine, and it unrolls to SQL CTEs verbatim. Relaxation visits
+    |frontier's edges| per round like frontier BFS; the union-min just
+    carries settled nodes through the narrow aggregate.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # Hash-partitioned by the join key ONCE (pagerank's weighted-edge
-    # discipline): every round's expansion join then re-exchanges only
-    # the small (node, hops) relation, never the edge list. ONE
-    # upstream pass (r18): the directed projection persists across the
-    # count and the undirected build (the caller's upstream — often a
-    # join + distinct — previously ran twice), and the repartition sits
-    # BEFORE the distinct so hash(a) satisfies the dedup's clustering
-    # and no second exchange appears.
-    spark = edges.sparkSession
-    e_p = e.persist()
-    m = e_p.count()  # directed count; undirected is ≤ 2m after distinct
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = max(4, min(session_parts, -(-2 * m // 75_000)))
-    # (BIGINT loop encoding was built and interleaved-A/B'd here in
-    # r19: bfs measured 3.08 vs 4.1-4.5 s WITH the encode at sf0.1 —
-    # the node-inventory distinct + mapping + boundary joins cost more
-    # than 4 narrower rounds save. Reverted; hits keeps the encode.)
-    und = (
-        e_p.unionAll(
-            e_p.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        .repartition(loop_parts, "a")
-        .distinct()
-        .persist()
+    unit = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst"), F.lit(1).alias("w")
     )
-    und.count()
-    e_p.unpersist()
-    reached = seeds.select(
-        F.col(node_col).alias("node"), F.lit(0).cast("int").alias("hops")
-    ).distinct()
-    # Each round references reached TWICE (carried union branch + the
-    # expansion join), so lazy chaining would double the plan subtree
-    # per round — 2^k copies by round k (measured: 87 s for 4 rounds at
-    # sf0.1 vs ~5 s checkpointed). An eager localCheckpoint per round
-    # keeps the plan flat; the materialized state is only (node, hops)
-    # int pairs. The oracle mirrors this with MATERIALIZED CTEs.
-    # The expansion join BROADCASTS the reached vector while it is
-    # small (one cheap count per round over the fresh checkpoint —
-    # GRAPH_BROADCAST_NODES): the shuffle alternative sort-merge
-    # re-sorts the cached edge partitions every round, which dominated
-    # the round cost at sf0.1.
-    reached = reached.localCheckpoint()
-    for r in range(max_hops):
-        rhs = (
-            F.broadcast(reached)
-            if reached.count() <= GRAPH_BROADCAST_NODES else reached
-        )
-        expanded = (
-            und.join(rhs, und["a"] == rhs["node"])
-            .select(
-                F.col("b").alias("node"),
-                (F.col("hops") + F.lit(1)).cast("int").alias("hops"),
-            )
-        )
-        new_reached = (
-            reached.unionAll(expanded)
-            .groupBy("node")
-            .agg(F.min("hops").alias("hops"))
-        )
-        if r == 0:
-            _capture_round_plan("bfs_hops round (pre-ckpt)", new_reached)
-        reached = new_reached.localCheckpoint()
-    und.unpersist()
-    return reached
+    return shortest_path_weighted(
+        unit, seeds, max_rounds=max_hops, node_col=node_col
+    ).select("node", F.col("dist").cast("int").alias("hops"))
 
 
 def shortest_path_weighted(edges: DataFrame, seeds: DataFrame,
@@ -356,11 +310,10 @@ def shortest_path_weighted(edges: DataFrame, seeds: DataFrame,
                            node_col: str = "node") -> DataFrame:
     """Bounded single/multi-source shortest path over POSITIVE INTEGER
     edge weights on an undirected graph → ``(node, dist)`` for every
-    node reachable within ``max_rounds`` relaxations (seeds at 0) —
-    the weighted generalization of :func:`bfs_hops` (same Bellman-Ford
-    skeleton: ``d_k = min(d_{k-1}, min over edges (a,b,w) of
-    d_{k-1}(a) + w)``), for cheapest-route / minimum-cost-reach
-    queries where hop count is the wrong metric.
+    node reachable within ``max_rounds`` relaxations (seeds at 0):
+    bounded Bellman-Ford, ``d_k = min(d_{k-1}, min over edges (a,b,w)
+    of d_{k-1}(a) + w)``, for cheapest-route / minimum-cost-reach
+    queries. :func:`bfs_hops` is this loop with unit weights.
 
     Note the bound semantics: after k rounds each node holds the
     cheapest path of AT MOST k edges — a cheaper longer path appears
@@ -370,12 +323,14 @@ def shortest_path_weighted(edges: DataFrame, seeds: DataFrame,
     edge list is made undirected — one extra pre-aggregation, and it
     shrinks the relation every later round re-joins.
 
-    Plan and 100 TB posture: identical to bfs_hops — edges
-    hash-partitioned by the join key ONCE and persisted; each round
-    shuffles only the (node, dist) int relation; eager per-round
-    localCheckpoint because each relaxation references its
-    predecessor twice (the lazy chain doubles the plan subtree per
-    round — measured at 2^k growth in bfs_hops).
+    Plan per round: reached ⋈ edges on the source key, union with the
+    carried distances, partial-agg MIN by node. The undirected edges
+    are hash-partitioned by the join key ONCE and persisted, so each
+    round shuffles only the (node, dist) int relation. Unlike
+    :func:`pagerank` (each round references the rank vector once),
+    each relaxation references its predecessor TWICE, so rounds
+    checkpoint eagerly instead of chaining lazily — see the loop
+    comment.
     """
     if max_rounds < 0:
         raise ValueError("max_rounds must be >= 0")
@@ -389,13 +344,9 @@ def shortest_path_weighted(edges: DataFrame, seeds: DataFrame,
     # join key BEFORE the min-collapse — hash(a) satisfies the
     # (a, b) grouping's clustering, so the aggregate adds no second
     # exchange and its output keeps the loop layout.
-    spark = edges.sparkSession
     e_p = e.persist()
-    m = e_p.count()
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = max(4, min(session_parts, -(-2 * m // 75_000)))
-    # (BIGINT loop encoding A/B'd and reverted in r19 — see bfs_hops;
-    # shortest_path measured 3.24 vs 4.4-4.6 s WITH the encode.)
+    # the undirected relation holds at most 2m rows
+    loop_parts = _loop_parts(edges.sparkSession, 2 * e_p.count())
     und = (
         e_p.unionAll(
             e_p.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
@@ -411,10 +362,18 @@ def shortest_path_weighted(edges: DataFrame, seeds: DataFrame,
         F.col(node_col).alias("node"),
         F.lit(0).cast("bigint").alias("dist"),
     ).distinct().localCheckpoint()
+    # Each round references reached TWICE (carried union branch + the
+    # expansion join), so lazy chaining would double the plan subtree
+    # per round — 2^k copies by round k (measured: 87 s for 4 rounds
+    # at sf0.1 vs ~5 s checkpointed). An eager localCheckpoint per
+    # round keeps the plan flat; the materialized state is only
+    # (node, dist) pairs. The oracle mirrors this with MATERIALIZED
+    # CTEs.
     for r in range(max_rounds):
-        # bfs_hops' gated broadcast: while the distance vector is small
-        # the relaxation join ships it instead of sort-merging against
-        # the cached (and per-round re-sorted) edge relation
+        # while the distance vector is small (one cheap count per round
+        # over the fresh checkpoint — GRAPH_BROADCAST_NODES) the
+        # relaxation join ships it instead of sort-merging against the
+        # cached edge relation, which re-sorted it every round
         rhs = (
             F.broadcast(reached)
             if reached.count() <= GRAPH_BROADCAST_NODES else reached
@@ -652,15 +611,9 @@ def label_propagation(edges: DataFrame, rounds: int,
     # BEFORE the distinct: hash(b) satisfies the distinct's (a, b)
     # clustering, so the dedup adds no second exchange and the loop
     # join reuses the layout, re-exchanging only the label relation.
-    spark = edges.sparkSession
     e_p = e.persist()
-    m = e_p.count()
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    loop_parts = max(4, min(session_parts, -(-2 * m // 75_000)))
-    # (BIGINT label/node encoding A/B'd in r19: flat at sf0.1 — the
-    # order-preserving mapping build + decode joins offset the
-    # narrower per-round count exchange. Reverted with bfs/sp/pagerank;
-    # hits keeps the encode where it measured a real win.)
+    # the undirected relation holds at most 2m rows
+    loop_parts = _loop_parts(edges.sparkSession, 2 * e_p.count())
     # the initial label vector is checkpointed eagerly (tiny — one row
     # per node) so its count can gate the per-round broadcast and the
     # first round reads a materialization instead of re-running the
@@ -735,8 +688,7 @@ def label_propagation(edges: DataFrame, rounds: int,
 
 
 def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
-         iters: int = 5,
-         loop_parts: int | None = None) -> DataFrame:
+         iters: int = 5) -> DataFrame:
     """HITS (Kleinberg hubs & authorities) over a directed edge list →
     ``(node, hub_ppm, auth_ppm)`` — the DIRECTED-ROLE companion to
     :func:`pagerank`: where PageRank gives one prestige score, HITS
@@ -773,24 +725,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
             "is a fixed iteration like pagerank's — zero rounds has "
             "no defined hub/authority vector"
         )
-    # the cached edge relation is the map side of every half-round's
-    # join; a caller's distinct/join output arrives AQE-coalesced to a
-    # partition or two, which ran each half-round's |E|-row probe side
-    # nearly serially on the broadcast path (r18) — spread it once at
-    # persist time (keyed, so no round-robin pre-sort)
-    _sess_parts = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    e0 = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")
-                      ).persist()
-    m = e0.count()
-    nodes_raw = (
-        e0.select(F.col("src").alias("node"))
-        .unionAll(e0.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes_raw.count()
+    e0, m, nodes_raw, n = _directed(edges, src, dst)
     if n == 0:
         out = nodes_raw.select(
             "node",
@@ -801,11 +736,14 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         nodes_raw.unpersist()  # symmetric with the non-empty path
         return out
     spark = edges.sparkSession
-    if loop_parts is None:
-        session_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        loop_parts = max(4, min(session_parts, -(-m // 75_000)))
+    loop_parts = _loop_parts(spark, m)
+    # the cached edge relation is the map side of every half-round's
+    # join; a caller's distinct/join output arrives AQE-coalesced to a
+    # partition or two, which ran each half-round's |E|-row probe side
+    # nearly serially on the broadcast path (r18) — spread it once at
+    # persist time over the full session width (keyed, so no
+    # round-robin pre-sort)
+    spread = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # SMALL-VECTOR regime (r18): while the node count is under
     # GRAPH_BROADCAST_NODES, every half-round joins the edge relation
     # against a BROADCAST of the ppm vector — the cached edge relation
@@ -833,13 +771,13 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         # partition-local — the per-half-round exchange disappears
         # outright. (The non-broadcast path below keeps join-key
         # layouts: there the per-round join is the exchange to avoid.)
-        e_agg_dst = enc.repartition(_sess_parts, "dst").persist()
-        e_agg_src = enc.repartition(_sess_parts, "src").persist()
+        e_agg_dst = enc.repartition(spread, "dst").persist()
+        e_agg_src = enc.repartition(spread, "src").persist()
         e_agg_dst.count()
         e_agg_src.count()
         e = e_src = e_dst = None
     else:
-        e = enc.repartition(_sess_parts, "src").persist()
+        e = enc.repartition(spread, "src").persist()
         e.count()
         nodes = nodes.repartition(loop_parts, "node").persist()
         # both directions get a pre-partitioned edge copy: the hub→auth
@@ -929,8 +867,6 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         # Arrow LocalRelation path avoids. Exact by construction:
         # Python/NumPy int64, (x·1e6)//max on positive ints ≡ the
         # decimal `div` rescale of the distributed path.
-        import pandas as pd
-
         _i64_safe = (2**63 - 1) // 1_000_000
 
         def _half_pd(edges_dir: DataFrame, join_key: str, out_key: str,

@@ -2512,10 +2512,11 @@ d0 AS (
         "— the blast-radius / supply-chain-reach class of iterative "
         "query beside the fixed-point (pagerank) and convergence "
         "(connected components) classes. Expressed as bounded "
-        "Bellman-Ford relaxation: per round ONE reached⋈edges hash "
-        "join + union + partial-agg MIN on integer hops, no anti-join "
-        "state, rounds chained lazily into one job; the oracle unrolls "
-        "the identical 4 relaxations as CTEs and the integer "
+        "Bellman-Ford relaxation (shortest_path_weighted with unit "
+        "weights): per round ONE reached⋈edges hash join + union + "
+        "partial-agg MIN on integer hops, no anti-join state, each "
+        "round checkpointed eagerly; the oracle unrolls the identical "
+        "4 relaxations as MATERIALIZED CTEs and the integer "
         "arithmetic matches exactly — no rounding anywhere",
     tags=("analytics", "graph", "iterative", "bfs"),
 )

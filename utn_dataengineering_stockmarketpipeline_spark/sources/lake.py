@@ -61,9 +61,12 @@ def compact(
 
     The periodic small-file compaction job plain parquet needs
     (SURVEY.md §4.2). Reads everything and hash-repartitions on the
-    partition keys, so each partition's rows land in one task; the
-    writer's ``maxRecordsPerFile`` then rolls to a new file every
-    ``target_rows_per_file`` rows. Rewrites atomically-enough for a
+    partition keys, so each partition's rows land in one task, sorted
+    by the partition keys and then by ``(stock_ticker, stock_date)`` —
+    the order ``write_stocks`` gives each file, which keeps row-group
+    stats selective. The writer's ``maxRecordsPerFile`` then rolls to
+    a new file every ``target_rows_per_file`` rows, so every file of a
+    leaf holds one sorted run. Rewrites atomically-enough for a
     single-writer lake (a real deployment would stage + swap or use a
     table format with ACID commits).
     """
@@ -71,7 +74,7 @@ def compact(
     (
         spark.read.parquet(path)
         .repartition(*partition_by)
-        .sortWithinPartitions(*partition_by)
+        .sortWithinPartitions(*partition_by, "stock_ticker", "stock_date")
         .write.mode("overwrite")
         .option("maxRecordsPerFile", target_rows_per_file)
         .partitionBy(*partition_by)
