@@ -283,6 +283,37 @@ def test_shortest_path_weighted_matches_brute_force(spark):
     assert run(0) == {"s": 0}
 
 
+def test_shortest_path_zero_rounds_returns_seeds_without_edge_build(
+    spark, spark_jobs
+):
+    """With no round to run, the seeds come back as they would after
+    the edge build, but without its persist, count and undirected
+    aggregate (those cost 7 of the 10 jobs the call used to run)."""
+    from utn_dataengineering_stockmarketpipeline_spark.operators.graph import (
+        bfs_hops,
+        shortest_path_weighted,
+    )
+
+    edges = spark.createDataFrame(
+        [("s", "a", 10), ("s", "b", 1), ("b", "c", 1)], ["src", "dst", "w"]
+    )
+    seeds = spark.createDataFrame([("s",), ("s",), ("z",)], ["node"])
+    jobs, dist = spark_jobs(shortest_path_weighted, edges, seeds, max_rounds=0)
+    assert sorted(dist.collect()) == [("s", 0), ("z", 0)]
+    assert jobs <= 3, f"{jobs} Spark jobs for zero rounds"
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in dist.schema] == [("node", "string", True),
+                                      ("dist", "bigint", False)]
+    jobs, hops = spark_jobs(
+        bfs_hops, edges.select("src", "dst"), seeds, max_hops=0
+    )
+    assert sorted(hops.collect()) == [("s", 0), ("z", 0)]
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in hops.schema] == [("node", "string", True),
+                                      ("hops", "int", False)]
+    assert jobs <= 3, f"{jobs} Spark jobs for zero hops"
+
+
 def test_triangle_stats_hand_graph(spark):
     """Triangle census on a hand graph: one closed triangle + one open
     wedge + a duplicate/reversed edge that must canonicalize away."""

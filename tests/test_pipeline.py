@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from utn_dataengineering_stockmarketpipeline_spark.operators.scd import (
@@ -164,6 +165,26 @@ def test_schema_drift_payload_with_and_without_optional_fields(spark):
     assert "adjusted_close" not in df_full.columns
     assert "warning" not in df_full.columns
     assert df_full.count() == df_bare.count() == 3
+
+
+def test_fetch_accepts_lossless_numbers_and_rejects_lossy_ones(spark):
+    """S3 parity with the reference's ``pd.DataFrame.from_dict``: a
+    whole-number price or a whole float volume is the same value and
+    loads; a fractional volume or a string price is not and raises."""
+    bar = _calendar("2024-01-01", 1)[0]
+
+    def fetch_one(**fields):
+        return fetch_stock(
+            spark, lambda kind, t, frm: [{**bar, **fields}], {"AAA": "2024-01-01"}
+        )
+
+    row = fetch_one(open=100, volume=12345.0).collect()[0]
+    assert row["open"] == 100.0 and isinstance(row["open"], float)
+    assert row["volume"] == 12345 and isinstance(row["volume"], int)
+    for bad in ({"volume": 1.5}, {"open": "7"}, {"open": "x"},
+                {"volume": "7"}, {"close": True}):
+        with pytest.raises(TypeError, match=next(iter(bad))):
+            fetch_one(**bad)
 
 
 def test_empty_batch_is_noop(spark, tmp_path):

@@ -44,6 +44,7 @@ from ..functions.hashing import (
     perm_seeds,
     shingle_hash_rows,
 )
+from ..session import local_df
 
 #: Default LSH bucket-size skew guard. A bucket of m members expands to
 #: m(m-1)/2 pairs, so one boilerplate bucket of 1e5 docs is 5e9 pairs in a
@@ -788,8 +789,8 @@ def duplicate_clusters(pairs: DataFrame, ids: DataFrame,
         if len(head) <= small_graph_cap:
             find = _min_root_closure(head, "src", "dst")
             nodes = sorted({v for r in head for v in (r["src"], r["dst"])})
-            labels = spark.createDataFrame(
-                [(n, find(n)) for n in nodes], "id long, label long"
+            labels = local_df(
+                spark, [(n, find(n)) for n in nodes], "id long, label long"
             )
             fast_path_edges = len(head)
             n_touched = len(nodes)
@@ -924,7 +925,8 @@ def duplicate_clusters(pairs: DataFrame, ids: DataFrame,
                 remap = sorted(
                     {v for r in rows for v in (r["l_src"], r["l_dst"])}
                 )
-                map_df = spark.createDataFrame(
+                map_df = local_df(
+                    spark,
                     [(lbl, find(lbl)) for lbl in remap],
                     "label long, root long",
                 )

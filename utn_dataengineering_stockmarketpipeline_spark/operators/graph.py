@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 #: Iteration bound: PageRank error contracts by the damping factor per
 #: round, so 10 rounds ≈ 0.85^10 ≈ 0.2 residual of the start gap —
 #: plenty for ranking/curation uses; raise for scientific use.
@@ -334,6 +336,12 @@ def shortest_path_weighted(edges: DataFrame, seeds: DataFrame,
     """
     if max_rounds < 0:
         raise ValueError("max_rounds must be >= 0")
+    reached = seeds.select(
+        F.col(node_col).alias("node"),
+        F.lit(0).cast("bigint").alias("dist"),
+    ).distinct().localCheckpoint()
+    if max_rounds == 0:  # no round reads the edges: skip their build
+        return reached
     e = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b"),
         F.col(weight).cast("bigint").alias("w"),
@@ -358,10 +366,6 @@ def shortest_path_weighted(edges: DataFrame, seeds: DataFrame,
     )
     und.count()
     e_p.unpersist()
-    reached = seeds.select(
-        F.col(node_col).alias("node"),
-        F.lit(0).cast("bigint").alias("dist"),
-    ).distinct().localCheckpoint()
     # Each round references reached TWICE (carried union branch + the
     # expansion join), so lazy chaining would double the plan subtree
     # per round — 2^k copies by round k (measured: 87 s for 4 rounds
@@ -775,17 +779,15 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         e_agg_src = enc.repartition(spread, "src").persist()
         e_agg_dst.count()
         e_agg_src.count()
-        e = e_src = e_dst = None
+        e_src = e_dst = None
     else:
-        e = enc.repartition(spread, "src").persist()
-        e.count()
         nodes = nodes.repartition(loop_parts, "node").persist()
         # both directions get a pre-partitioned edge copy: the hub→auth
         # pass joins on src, the auth→hub pass on dst — partitioned
         # ONCE each, so neither per-round join re-shuffles the edge
-        # list
-        e_src = e.repartition(loop_parts, "src").persist()
-        e_dst = e.repartition(loop_parts, "dst").persist()
+        # list. Each encodes from the cached e0; no third copy is kept.
+        e_src = enc.repartition(loop_parts, "src").persist()
+        e_dst = enc.repartition(loop_parts, "dst").persist()
         e_src.count()
         e_dst.count()
     e0.unpersist()
@@ -857,24 +859,18 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         # input), so collecting the half-round aggregate explicitly
         # moves no extra bytes — and the max + rescale run as exact
         # integer arithmetic on the driver while the next half-round
-        # re-enters as a LocalRelation, whose broadcast is a ZERO-TASK
+        # re-enters through `local_df`, whose broadcast is a ZERO-TASK
         # driver-side collect. ONE Spark job per half-round (the
         # edge-sum aggregate's collect) instead of checkpoint + max +
-        # broadcast-build jobs. The r18 driver-rescale prototype that
-        # measured WORSE (9.3 s) round-tripped through parallelized
-        # createDataFrame — a LogicalRDD scan plus distributed
-        # broadcast build per half-round — which is exactly what the
-        # Arrow LocalRelation path avoids. Exact by construction:
-        # Python/NumPy int64, (x·1e6)//max on positive ints ≡ the
-        # decimal `div` rescale of the distributed path.
+        # broadcast-build jobs. Exact by construction: Python/NumPy
+        # int64, (x·1e6)//max on positive ints ≡ the decimal `div`
+        # rescale of the distributed path.
         _i64_safe = (2**63 - 1) // 1_000_000
 
         def _half_pd(edges_dir: DataFrame, join_key: str, out_key: str,
                      vec_pdf, in_col: str, out_col: str,
                      capture: bool = False):
-            v = spark.createDataFrame(
-                vec_pdf, schema=f"node bigint, {in_col} bigint"
-            )
+            v = local_df(spark, vec_pdf, f"node bigint, {in_col} bigint")
             agg = (
                 edges_dir.join(F.broadcast(v), edges_dir[join_key] == v["node"])
                 .select(out_key, in_col)
@@ -903,14 +899,8 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
             auth_pdf = _half_pd(e_agg_dst, "src", "dst", hub_pdf, "h", "a",
                                 capture=(it == 0))
             hub_pdf = _half_pd(e_agg_src, "dst", "src", auth_pdf, "a", "h")
-        h_v = F.broadcast(spark.createDataFrame(
-            hub_pdf.rename(columns={"node": "__hn"}),
-            schema="__hn bigint, h bigint",
-        ))
-        a_v = F.broadcast(spark.createDataFrame(
-            auth_pdf.rename(columns={"node": "__an"}),
-            schema="__an bigint, a bigint",
-        ))
+        h_v = F.broadcast(local_df(spark, hub_pdf, "__hn bigint, h bigint"))
+        a_v = F.broadcast(local_df(spark, auth_pdf, "__an bigint, a bigint"))
     else:
         hub = nodes.select("node", ppm.alias("h"))
         auth = None
@@ -938,7 +928,6 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         e_agg_dst.unpersist()
         e_agg_src.unpersist()
     else:
-        e.unpersist()
         nodes.unpersist()
         e_src.unpersist()
         e_dst.unpersist()

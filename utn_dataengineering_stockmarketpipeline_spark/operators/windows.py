@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 
 def latest_global_date(fact: DataFrame, date_col: str = "stock_date") -> DataFrame:
     """Rows on the globally-latest date (scalar-subquery MAX, A1/W1).
@@ -123,8 +125,8 @@ def _offset_ranked(
         return None, 0
 
     spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        offsets, df.select(value_col).schema.add("__offset", "long")
+    off_df = local_df(
+        spark, offsets, df.select(value_col).schema.add("__offset", "long")
     ).withColumnRenamed(value_col, "__off_key")
 
     order = F.col(tiebreak_col)

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from ..sources.parquet import load_table
 from .catalog import register
 from .confscope import scoped_sql_conf
@@ -2348,7 +2349,8 @@ def q_benford_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     tot = obs.agg(F.sum("cnt").alias("n"))
-    benford = spark.createDataFrame(
+    benford = local_df(
+        spark,
         [(1, 301030), (2, 176091), (3, 124939), (4, 96910), (5, 79181),
          (6, 66947), (7, 57992), (8, 51153), (9, 45757)],
         "digit bigint, benford_ppm bigint",

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import M31, M31_2, SHINGLE_B, SHINGLE_B2, perm_seeds
 from ..operators import dedup, similarity, text
+from ..session import local_df
 from ..sources.parquet import load_table
 from .catalog import register
 
@@ -554,9 +555,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (i + 1, pair, sym) for i, (pair, sym) in enumerate(merges)
     ]
-    return spark.createDataFrame(
-        rows, "merge_rank int, pair string, symbol string"
-    )
+    return local_df(spark, rows, "merge_rank int, pair string, symbol string")
 
 
 _STOPS_SQL = "[" + ", ".join(f"'{w}'" for w in text.ENGLISH_STOPWORDS) + "]"

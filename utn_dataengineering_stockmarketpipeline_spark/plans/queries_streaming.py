@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_df
 from .catalog import register
 from .confscope import scoped_sql_conf
 
@@ -737,7 +738,8 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         collected,
         "doc_id long, dup_of long, n_corpus_hits long, is_dup boolean",
     )
@@ -852,20 +854,7 @@ def q_stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         state_cols = [f.name for f in state_schema.fields]
 
-        def _local_state(recs: list) -> DataFrame:
-            # pandas → Arrow → LocalRelation, NOT a parallelized RDD
-            # (r19): createDataFrame(list) plans as a Scan ExistingRDD,
-            # so every broadcast build inside the merge ran a
-            # distributed job — 6-7 jobs ≈ 1.7 s per 13-row batch.
-            # A LocalRelation's broadcast is a driver-side collect with
-            # ZERO tasks; the measured merge loop dropped 5.7 → 2.5 s.
-            import pandas as pd
-
-            return spark.createDataFrame(
-                pd.DataFrame(recs, columns=state_cols), schema=state_schema
-            )
-
-        state_box = [_local_state([])]
+        state_box = [local_df(spark, [], state_schema)]
 
         def handle(batch_df: DataFrame, batch_id: int) -> None:
             # the dimension snapshot is BOUNDED (the 5-ticker reference
@@ -887,15 +876,11 @@ def q_stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             lds = {str(r["load_date"]) for r in rows}
             assert len(lds) == 1, f"snapshot files merged into one batch: {lds}"
-            # LocalRelation, not a parallelized list (see _local_state)
-            import pandas as pd
-
-            inc = spark.createDataFrame(
-                pd.DataFrame(
-                    [[r[c] for c in _MKT_COLS] for r in rows],
-                    columns=list(_MKT_COLS),
-                ),
-                schema=T.StructType(
+            # a LocalRelation, so the merge's broadcast builds run no task
+            inc = local_df(
+                spark,
+                [[r[c] for c in _MKT_COLS] for r in rows],
+                T.StructType(
                     [T.StructField(c, T.StringType()) for c in _MKT_COLS]
                 ),
             )
@@ -908,8 +893,10 @@ def q_stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             # materialize the bounded dim state so the next batch's merge
             # reads data, not an ever-deepening lineage
-            state_box[0] = _local_state(
-                [[r[c] for c in state_cols] for r in new_state.collect()]
+            state_box[0] = local_df(
+                spark,
+                [[r[c] for c in state_cols] for r in new_state.collect()],
+                state_schema,
             )
 
         with _capped_state_partitions(spark, 8):
@@ -1025,7 +1012,8 @@ def _register_stream_heavy_hitters() -> None:
                 q.awaitTermination()
             assert n_batches[0] == 3, f"expected 3 micro-batches, got {n_batches[0]}"
 
-            sk = spark.createDataFrame(
+            sk = local_df(
+                spark,
                 [(i, b, c) for (i, b), c in sorted(acc.items())],
                 "i int, b bigint, cms long",
             )
@@ -1136,7 +1124,7 @@ def _drained_counts_monitor(spark: SparkSession, sf_dir: str, stat_fn,
         # materialize BEFORE the temp partials vanish (the finally
         # removes them; the returned relation must not read lazily
         # from a deleted directory)
-        return spark.createDataFrame(out.collect(), schema=out.schema)
+        return local_df(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

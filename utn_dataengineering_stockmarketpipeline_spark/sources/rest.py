@@ -7,8 +7,10 @@ pluggable callable so tests inject local JSON fixtures (no network).
 One ETL cycle is one batch: ``fetch_stock`` calls the fetcher once per
 ticker on the driver, validates every payload, and returns a single
 frame tagged with ``ticker``; ``fetch_market`` does the same for all
-exchanges. Executor fan-out for large ticker universes is the Spark 4
-DataSource in ``sources/datasource.py``.
+exchanges. That frame enters Spark through ``session.local_df`` as an
+Arrow-built ``LocalRelation``: the lake write and both stage writes scan
+it without Python-worker tasks. Executor fan-out for large ticker
+universes is the Spark 4 DataSource in ``sources/datasource.py``.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..schemas import MARKET_RAW, STOCK_RAW_TAGGED
+from ..session import local_df
 
 # fetcher(kind, entity, from_date) -> list of JSON row dicts.
 Fetcher = Callable[[str, str, str], list[dict[str, Any]]]
@@ -75,10 +78,14 @@ def json_rows_to_df(
     Unlike the reference's ``pd.DataFrame.from_dict`` inference
     (API_manager.py:147), the schema is explicit; fields absent from the
     payload surface as nulls (the adjusted_close/warning drift case).
+    Like ``from_dict``, a whole-number price (``"open": 100``) or volume
+    (``"volume": 12345.0``) is accepted; a lossy or wrong-kind value
+    (``1.5`` as a volume, ``"7"`` as a price) raises ``TypeError``
+    (both rules are ``session.local_df``'s).
     """
     names = [f.name for f in schema.fields]
     prepared = [tuple(r.get(n) for n in names) for r in rows]
-    return spark.createDataFrame(prepared, schema)
+    return local_df(spark, prepared, schema)
 
 
 def fetch_stock(
