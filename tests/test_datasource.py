@@ -39,6 +39,11 @@ def fixture_dir(tmp_path_factory):
     # E1 bodies: an in-body error sentinel and a null payload
     (base / "GHOST.json").write_text(json.dumps("Ticker Not Found."))
     (base / "EMPTY.json").write_text("null")
+    # S3 numbers: whole values in the other kind, and a lossy volume
+    bar = {"date": "2024-01-02", "open": 100, "high": 101.0, "low": 99.0,
+           "close": 100.5, "adjusted_close": 100.5}
+    (base / "WHOLE.json").write_text(json.dumps([{**bar, "volume": 12345.0}]))
+    (base / "LOSSY.json").write_text(json.dumps([{**bar, "volume": 1.5}]))
     return str(base)
 
 
@@ -105,3 +110,23 @@ def test_datasource_applies_payload_checks(registered, fixture_dir):
     with pytest.raises(Exception, match="Ticker Not Found"):
         read("GHOST").collect()
     assert read("EMPTY").count() == 0
+
+
+def test_datasource_numbers_match_the_rest_path(registered, fixture_dir):
+    """The executor path loads numbers by the rule ``fetch_stock``
+    applies: a whole value widens, a fractional volume fails the read
+    and names the column instead of loading truncated to 1."""
+
+    def read(ticker):
+        return (
+            registered.read.format("stock_api")
+            .option("tickers", ticker)
+            .option("fixture_dir", fixture_dir)
+            .load()
+        )
+
+    row = read("WHOLE").collect()[0]
+    assert row["open"] == 100.0 and isinstance(row["open"], float)
+    assert row["volume"] == 12345 and isinstance(row["volume"], int)
+    with pytest.raises(Exception, match="'volume': 1.5"):
+        read("LOSSY").collect()

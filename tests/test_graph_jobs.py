@@ -1,9 +1,10 @@
 """Spark-job budget of the catalog's graph queries.
 
 Job counts are deterministic where wall time is not: each graph loop's
-set-up (persist + count), per-round checkpoints and size-gate counts
-show up as jobs. A change that adds a pass or an action to a loop
-fails here even when the values stay right.
+set-up, per-round checkpoints and table reads show up as jobs (its
+size-gate counts ride on the job that fills a cache or checkpoint). A
+change that adds a pass or an action to a loop fails here even when
+the values stay right.
 """
 
 from __future__ import annotations
@@ -11,23 +12,27 @@ from __future__ import annotations
 import pytest
 
 from utn_dataengineering_stockmarketpipeline_spark.plans.catalog import CATALOG
+from utn_dataengineering_stockmarketpipeline_spark.sources import parquet
 
 from conftest import SF_SMOKE
 
-#: Jobs of one build + collect at sf0.001, measured with 2, 4 and 8
-#: local cores and 8 or 32 shuffle partitions (the same at sf0.01).
+#: Jobs of one build + collect at sf0.001 with an empty schema cache
+#: (so each table read pays its inference job whatever ran before),
+#: measured with 2, 4 and 8 local cores and 8 or 32 shuffle
+#: partitions.
 GRAPH_JOB_BUDGET = {
-    "ana_pagerank_suppliers": 40,
-    "ana_hits_graph": 49,
-    "ana_bfs_reach": 35,
-    "ana_shortest_path": 35,
-    "ana_communities_lp": 20,
-    "ana_kcore_suppliers": 19,
+    "ana_pagerank_suppliers": 37,
+    "ana_hits_graph": 44,
+    "ana_bfs_reach": 25,
+    "ana_shortest_path": 25,
+    "ana_communities_lp": 16,
+    "ana_kcore_suppliers": 13,
 }
 
 
 @pytest.mark.parametrize("name", sorted(GRAPH_JOB_BUDGET))
 def test_graph_query_job_budget(name, spark, spark_jobs):
+    parquet._SCHEMA_CACHE.clear()
     jobs, rows = spark_jobs(
         lambda: CATALOG[name].build(spark, SF_SMOKE).collect()
     )

@@ -94,11 +94,18 @@ def test_plans_as_local_relation_under_either_arrow_conf(spark, arrow):
 
 
 def test_etl_fetch_frame_is_a_local_relation(spark):
+    """The fetch batch scans a ``LocalRelation``, coalesced (a narrow
+    ``Repartition`` without shuffle) to the one partition that writes
+    one file per lake leaf."""
     bar = {"date": "2024-01-02", "open": 1.0, "high": 2.0, "low": 0.5,
            "close": 1.5, "adjusted_close": 1.5, "volume": 10}
-    raw = fetch_stock(spark, lambda kind, t, frm: [bar], {"AAA": "2024-01-01"})
-    assert _plan_root(raw) == "LocalRelation"
-    assert raw.count() == 1
+    bars = [{**bar, "date": f"2024-01-{d:02d}"} for d in range(2, 12)]
+    raw = fetch_stock(spark, lambda kind, t, frm: bars, {"AAA": "2024-01-01"})
+    plan = raw._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "Repartition"
+    assert not plan.shuffle() and plan.numPartitions() == 1
+    assert plan.child().getClass().getSimpleName() == "LocalRelation"
+    assert raw.count() == 10
 
 
 def test_null_in_non_nullable_field_raises(spark):

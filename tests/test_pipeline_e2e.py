@@ -143,6 +143,32 @@ def test_cycle_job_budget(spark, dbs, tmp_path, spark_jobs):
     )
 
 
+def test_cycle_writes_one_lake_file_per_leaf(spark, dbs, tmp_path):
+    """A cycle's fetch batch is one partition, so its lake append adds
+    exactly one parquet file to each ``(year, month)`` leaf it touches,
+    not one file per core (a 4-ticker new day used to write 4 one-row
+    files into its month)."""
+    stage, dw = dbs
+    lake_dir = tmp_path / "bronze"
+    tickers = ["AAA", "BBB", "CCC", "DDD"]
+
+    def cycle(up_to):
+        pipeline.run_pipeline(
+            spark, make_fetcher(up_to), tickers, ["NYSE"], str(lake_dir),
+            stage, dw,
+        )
+        leaves = {}
+        for f in lake_dir.rglob("*.parquet"):
+            leaf = str(f.parent.relative_to(lake_dir))
+            leaves[leaf] = leaves.get(leaf, 0) + 1
+        return leaves
+
+    jan, feb = "stock_year=2024/stock_month=1", "stock_year=2024/stock_month=2"
+    assert cycle("2024-02-10") == {jan: 1, feb: 1}  # backfill: 164 rows
+    assert cycle("2024-02-11") == {jan: 1, feb: 2}  # new day: 4 rows
+    assert cycle("2024-02-11") == {jan: 1, feb: 2}  # idle: no file
+
+
 def test_commit_prune_is_exact_across_months(spark, dbs, tmp_path):
     """The stock commit reads only the warehouse partitions from the
     batch's earliest (year, month) on. The fixture API ignores ``from``

@@ -44,7 +44,7 @@ from ..functions.hashing import (
     perm_seeds,
     shingle_hash_rows,
 )
-from ..session import local_df
+from ..session import local_df, materialize
 
 #: Default LSH bucket-size skew guard. A bucket of m members expands to
 #: m(m-1)/2 pairs, so one boilerplate bucket of 1e5 docs is 5e9 pairs in a
@@ -705,7 +705,7 @@ def duplicate_clusters(pairs: DataFrame, ids: DataFrame,
     Iterative min-label propagation WITH ADAPTIVE pointer jumping: each
     sub-round every node takes the min of its own and its neighbors'
     labels; from sub-round ``JUMP_START_ROUND`` onward (= once the
-    first super-round's decay check shows the graph is still moving)
+    first two rounds' sum checks show the graph is still moving)
     each sub-round also compresses paths by adopting its label's label
     (l(u) <- l(l(u))). The jump keeps convergence O(log diameter) — a
     10x-replicated corpus whose variant chains form paths of length ~40
@@ -713,14 +713,15 @@ def duplicate_clusters(pairs: DataFrame, ids: DataFrame,
     budget — but it is an extra (long, long) self-join per sub-round,
     pure overhead on the SHALLOW graphs LSH actually emits (in-bucket
     pair expansion yields cliques/stars of diameter 1-2 that converge
-    inside the first super-round and pay zero jump joins; r7 measured
-    always-jump at 2.3x deferred there). Sub-rounds run in fused
-    SUPER-ROUNDS of two: one ``localCheckpoint`` (plan truncation) and
-    one convergence action per super-round, halving the per-round job
-    fixed cost that dominated the r8 10x scale evidence. Convergence
+    inside the first two rounds and pay zero jump joins; r7 measured
+    always-jump at 2.3x deferred there). Each round ends in ONE
+    action: it fills the round's lazy ``localCheckpoint`` (plan
+    truncation) and observes the label sum on the way
+    (``session.materialize``), so the per-round job fixed cost that
+    dominated the r8 10x scale evidence is paid once. Convergence is
     detected via the strictly-decreasing label sum — labels only ever
-    decrease, so a sum stagnant across a whole super-round means no
-    sub-step changed anything, which is exactly the propagation
+    decrease, so a sum stagnant across a round means no sub-step
+    changed anything, which is exactly the propagation
     fixpoint (labels constant along every path = component min);
     correctness is independent of when jumps run, at worst one no-op
     overshoot sub-step after the true fixpoint.
@@ -761,9 +762,10 @@ def duplicate_clusters(pairs: DataFrame, ids: DataFrame,
     # touched ids, the initial labels, and the final singleton anti-join
     # all read it, and without the cache each of those actions re-runs
     # the upstream pair generation (the LSH banding — the expensive
-    # part). touched is then eagerly checkpointed (it is only the node
-    # ids — tiny) so the lazy `singles` tail returned to the caller
-    # never recomputes pair generation after edges_raw is released.
+    # part). touched is then checkpointed (it is only the node ids —
+    # tiny) and filled before edges_raw is released, so the lazy
+    # `singles` tail returned to the caller never recomputes pair
+    # generation.
     edges_raw = e.unionAll(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
@@ -776,9 +778,9 @@ def duplicate_clusters(pairs: DataFrame, ids: DataFrame,
     converged = False
 
     # SMALL-GRAPH FAST PATH — probed FIRST: one bounded LIMIT collect
-    # replaces the touched checkpoint, the convergence-sum probe and
-    # both count jobs the loop path needs (exactly the per-job fixed
-    # costs this path exists to avoid). Under the cap the whole
+    # replaces the touched checkpoint with its count-and-sum probe and
+    # the edge-layout job the loop path needs (exactly the per-job
+    # fixed costs this path exists to avoid). Under the cap the whole
     # closure runs centrally (same min-root union-find as the
     # contraction tail, over raw doc-id edges); touched nodes are
     # exactly the edge endpoints, so the closure map IS the label
@@ -802,13 +804,15 @@ def duplicate_clusters(pairs: DataFrame, ids: DataFrame,
         touched = (
             edges_raw.select(F.col("src").alias("id"))
             .distinct()
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
         # labels derive from the checkpointed touched ids — upstream
         # pair generation (LSH etc.) runs at the session's
-        # partitioning; only the iteration below is scoped.
+        # partitioning; only the iteration below is scoped. One job
+        # fills the checkpoint, counts the ids and sums the labels.
         labels = touched.select("id", F.col("id").alias("label"))
-        prev_sum = labels.agg(F.sum("label")).first()[0]
+        probe = materialize(labels, n=F.count(F.lit(1)), s=F.sum("label"))
+        n_touched, prev_sum = probe["n"], probe["s"]
         converged = prev_sum is None  # no edges: everything a singleton
 
         # The per-round joins move only the (long, long) label vector;
@@ -818,7 +822,6 @@ def duplicate_clusters(pairs: DataFrame, ids: DataFrame,
         # count (~50k labels/partition), never above the session
         # setting — at real scale the need exceeds the session value
         # and this is a no-op.
-        n_touched = touched.count()
         loop_parts = max(4, min(session_parts, -(-n_touched // 50_000)))
         if converged:  # no edges at all — nothing to iterate
             edges_raw.unpersist()
@@ -826,18 +829,18 @@ def duplicate_clusters(pairs: DataFrame, ids: DataFrame,
             # one-time layout: edges by dst, labels by id, both at loop
             # width — the per-round join is co-partitioned, no exchange
             edges = edges_raw.repartition(loop_parts, "dst").persist()
-            edges.count()  # materialize from the raw cache, release it
+            materialize(edges)  # fill from the raw cache, release it
             edges_raw.unpersist()
             labels = labels.repartition(loop_parts, "id")
     # Per-round fixed cost (job scheduling + checkpoint + convergence
     # action) dominated the 10x scale evidence in r8 (13 rounds = 13
     # eager-checkpoint jobs + 13 sum jobs). One job per round instead:
-    # a LAZY localCheckpoint materializes inside the convergence-sum
-    # action, so plan truncation and the scalar check share a single
-    # job. (Fusing two propagation rounds per checkpoint was tried and
-    # is SLOWER: the un-materialized sub-step frame is referenced twice
-    # — by the next join and its own aggregate — so Catalyst re-executes
-    # the diamond's whole subtree.)
+    # ``materialize`` fills a LAZY localCheckpoint and observes the
+    # label sum as the rows pass, so plan truncation and the scalar
+    # check share a single job. (Fusing two propagation rounds per
+    # checkpoint was tried and is SLOWER: the un-materialized sub-step
+    # frame is referenced twice — by the next join and its own
+    # aggregate — so Catalyst re-executes the diamond's whole subtree.)
     for it in range(max_iters):
         if converged:
             break
@@ -878,7 +881,7 @@ def duplicate_clusters(pairs: DataFrame, ids: DataFrame,
                 .repartition(loop_parts, "id")
             )
         labels = merged.localCheckpoint(eager=False)
-        cur_sum = labels.agg(F.sum("label")).first()[0]
+        cur_sum = materialize(labels, s=F.sum("label"))["s"]
         if cur_sum == prev_sum:  # labels only decrease; fixpoint
             converged = True
         prev_sum = cur_sum

@@ -22,8 +22,11 @@ shuffle width, and :func:`_directed` builds the persisted edge
 projection and node inventory that pagerank and hits start from. The
 round bodies stay separate because they materialize rounds in
 different ways: pagerank chains lazily, the Bellman-Ford loop
-checkpoints eagerly, LPA checkpoints lazily and hits rescales on the
-driver.
+materializes every round, LPA checkpoints lazily and hits rescales on
+the driver. Where a loop needs a row count (a regime gate, a loop
+width, an early stop), ``session.materialize`` observes it on the
+job that fills the cache or checkpoint, never as a count job of its
+own.
 
 Determinism contract: a FIXED iteration count, no convergence RNG, so
 any engine that runs the same algebra reproduces the values (the
@@ -36,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import local_df
+from ..session import local_df, materialize
 
 #: Iteration bound: PageRank error contracts by the damping factor per
 #: round, so 10 rounds ≈ 0.85^10 ≈ 0.2 residual of the start gap —
@@ -145,6 +148,12 @@ def _encode_edges(e: DataFrame, mapping: DataFrame, broadcast_map: bool,
     )
 
 
+def _filled_rows(df: DataFrame) -> int:
+    """Fill ``df``'s persist or lazy checkpoint and return its row
+    count, observed by that same job."""
+    return materialize(df, n=F.count(F.lit(1)))["n"]
+
+
 def _loop_parts(spark: SparkSession, rows: int) -> int:
     """Shuffle width of a loop whose per-round join reads ``rows`` edge
     rows: ~75k rows per partition, at least 4, capped at the session's
@@ -165,7 +174,8 @@ def _loop_parts(spark: SparkSession, rows: int) -> int:
 
 def _directed(edges: DataFrame, src: str, dst: str):
     """The persisted ``(src, dst)`` projection and its persisted
-    distinct node inventory, each counted once → ``(e, m, nodes, n)``.
+    distinct node inventory, each counted by the job that fills its
+    cache → ``(e, m, nodes, n)``.
 
     The node inventory and every later build (degree table, node
     mapping, edge layouts) read the cache; without the persist each
@@ -174,14 +184,14 @@ def _directed(edges: DataFrame, src: str, dst: str):
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")
                      ).persist()
-    m = e.count()
+    m = _filled_rows(e)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
         .persist()
     )
-    return e, m, nodes, nodes.count()
+    return e, m, nodes, _filled_rows(nodes)
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -235,7 +245,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     we = e.join(outdeg, "src").repartition(
         loop_parts, "dst" if small_vec else "src"
     ).persist()
-    we.count()
+    materialize(we)
 
     teleport = (1.0 - damping) / n
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
@@ -330,16 +340,19 @@ def shortest_path_weighted(edges: DataFrame, seeds: DataFrame,
     are hash-partitioned by the join key ONCE and persisted, so each
     round shuffles only the (node, dist) int relation. Unlike
     :func:`pagerank` (each round references the rank vector once),
-    each relaxation references its predecessor TWICE, so rounds
-    checkpoint eagerly instead of chaining lazily — see the loop
-    comment.
+    each relaxation references its predecessor TWICE, so every round
+    is checkpointed and materialized instead of chaining lazily — see
+    the loop comment.
     """
     if max_rounds < 0:
         raise ValueError("max_rounds must be >= 0")
+    # every distance vector is a lazy checkpoint filled by the job that
+    # also counts it: the count gates the next round's broadcast
     reached = seeds.select(
         F.col(node_col).alias("node"),
         F.lit(0).cast("bigint").alias("dist"),
-    ).distinct().localCheckpoint()
+    ).distinct().localCheckpoint(eager=False)
+    n_reached = _filled_rows(reached)
     if max_rounds == 0:  # no round reads the edges: skip their build
         return reached
     e = edges.select(
@@ -354,7 +367,7 @@ def shortest_path_weighted(edges: DataFrame, seeds: DataFrame,
     # exchange and its output keeps the loop layout.
     e_p = e.persist()
     # the undirected relation holds at most 2m rows
-    loop_parts = _loop_parts(edges.sparkSession, 2 * e_p.count())
+    loop_parts = _loop_parts(edges.sparkSession, 2 * _filled_rows(e_p))
     und = (
         e_p.unionAll(
             e_p.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
@@ -364,23 +377,24 @@ def shortest_path_weighted(edges: DataFrame, seeds: DataFrame,
         .agg(F.min("w").alias("w"))
         .persist()
     )
-    und.count()
+    materialize(und)
     e_p.unpersist()
     # Each round references reached TWICE (carried union branch + the
     # expansion join), so lazy chaining would double the plan subtree
     # per round — 2^k copies by round k (measured: 87 s for 4 rounds
-    # at sf0.1 vs ~5 s checkpointed). An eager localCheckpoint per
-    # round keeps the plan flat; the materialized state is only
+    # at sf0.1 vs ~5 s checkpointed). A localCheckpoint materialized
+    # every round keeps the plan flat; the materialized state is only
     # (node, dist) pairs. The oracle mirrors this with MATERIALIZED
     # CTEs.
     for r in range(max_rounds):
-        # while the distance vector is small (one cheap count per round
-        # over the fresh checkpoint — GRAPH_BROADCAST_NODES) the
-        # relaxation join ships it instead of sort-merging against the
-        # cached edge relation, which re-sorted it every round
+        # while the distance vector is small (its row count, observed
+        # by the job that filled its checkpoint, is at most
+        # GRAPH_BROADCAST_NODES) the relaxation join ships it instead
+        # of sort-merging against the cached edge relation, which
+        # re-sorted it every round
         rhs = (
             F.broadcast(reached)
-            if reached.count() <= GRAPH_BROADCAST_NODES else reached
+            if n_reached <= GRAPH_BROADCAST_NODES else reached
         )
         expanded = (
             und.join(rhs, und["a"] == rhs["node"])
@@ -397,7 +411,8 @@ def shortest_path_weighted(edges: DataFrame, seeds: DataFrame,
         if r == 0:
             _capture_round_plan("shortest_path_weighted round (pre-ckpt)",
                                 new_reached)
-        reached = new_reached.localCheckpoint()
+        reached = new_reached.localCheckpoint(eager=False)
+        n_reached = _filled_rows(reached)
     und.unpersist()
     return reached
 
@@ -521,25 +536,32 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int,
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a") != F.col("b")
     )
+    # every checkpoint here is lazy: the one job per sweep that fills
+    # and counts the removed set also fills the degree vector (and, on
+    # the first sweep, the undirected relation) it reads. The returned
+    # degrees may be the last sweep's checkpoint, filled by the
+    # caller's action from materialized inputs only.
     und = (
         e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     deg = (
         und.groupBy("a")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     for _ in range(rounds):
-        removed = deg.filter(F.col("deg") < k).select(
-            F.col("a").alias("b")
+        removed = (
+            deg.filter(F.col("deg") < k)
+            .select(F.col("a").alias("b"))
+            .localCheckpoint(eager=False)
         )
-        n_removed = removed.count()
+        n_removed = _filled_rows(removed)
         if n_removed == 0:
             break  # cascade settled: the exact k-core is reached
         if n_removed <= KCORE_BROADCAST_REMOVED:
-            removed = F.broadcast(removed.localCheckpoint())
+            removed = F.broadcast(removed)
         delta = (
             und.join(removed, "b", "left_semi")
             .groupBy("a")
@@ -552,7 +574,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int,
                 "a",
                 (F.col("deg") - F.coalesce("d", F.lit(0))).alias("deg"),
             )
-            .localCheckpoint()
+            .localCheckpoint(eager=False)
         )
     # survivors that lost their last edge report no row (the degree
     # aggregation over the filtered edge relation never emitted one)
@@ -604,11 +626,11 @@ def label_propagation(edges: DataFrame, rounds: int,
         F.col("a") != F.col("b")
     )
     # ONE upstream pass (r18): the directed projection is persisted and
-    # counted once, so the undirected build reads the cache instead of
-    # re-running the caller's upstream (typically a join + distinct —
-    # measured as a full second scan at sf0.1). PERSIST rather than an
-    # unpartitioned localCheckpoint for the loop relation: the
-    # undirected relation is 2|E| rows read every round, and
+    # counted by the job that fills it, so the undirected build reads
+    # the cache instead of re-running the caller's upstream (typically
+    # a join + distinct — measured as a full second scan at sf0.1).
+    # PERSIST rather than an unpartitioned localCheckpoint for the loop
+    # relation: the undirected relation is 2|E| rows read every round, and
     # checkpointing it into a handful of input-shaped partitions OOMed
     # the 100x scale capture (140M rows in ~4 partitions). Partitioned
     # by the per-round join key ("b" — labels attach to the neighbor)
@@ -617,27 +639,27 @@ def label_propagation(edges: DataFrame, rounds: int,
     # join reuses the layout, re-exchanging only the label relation.
     e_p = e.persist()
     # the undirected relation holds at most 2m rows
-    loop_parts = _loop_parts(edges.sparkSession, 2 * e_p.count())
-    # the initial label vector is checkpointed eagerly (tiny — one row
-    # per node) so its count can gate the per-round broadcast and the
-    # first round reads a materialization instead of re-running the
-    # node distinct; built from the DIRECTED cache (same node set as
-    # the undirected relation — every a appears as some edge's b in
-    # the reversed branch) so the gate is known BEFORE und's layout
-    # must be chosen
+    loop_parts = _loop_parts(edges.sparkSession, 2 * _filled_rows(e_p))
+    # the initial label vector is checkpointed (tiny — one row per
+    # node) by the job that counts it, so the count can gate the
+    # per-round broadcast and the first round reads a materialization
+    # instead of re-running the node distinct; built from the DIRECTED
+    # cache (same node set as the undirected relation — every a
+    # appears as some edge's b in the reversed branch) so the gate is
+    # known BEFORE und's layout must be chosen
     labels = (
         e_p.select(F.col("a").alias("node"))
         .unionAll(e_p.select(F.col("b").alias("node")))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     # node count is fixed across rounds, so the broadcast gate is
     # decided once: under GRAPH_BROADCAST_NODES the per-round join
     # broadcasts the label vector (edge partitions read as cached, no
     # per-round sort-merge re-sort); over it the co-partitioned
     # shuffle join stands
-    small_vec = labels.count() <= GRAPH_BROADCAST_NODES
+    small_vec = _filled_rows(labels) <= GRAPH_BROADCAST_NODES
     # und's ONE-TIME layout serves the per-round hot path of its
     # regime (r19, §2.4): on the broadcast path the join ships the
     # label vector, so partitioning by "a" — the key the per-round
@@ -654,7 +676,7 @@ def label_propagation(edges: DataFrame, rounds: int,
         .distinct()
         .persist()
     )
-    und.count()
+    materialize(und)
     e_p.unpersist()
     for r in range(rounds):
         lbl = labels.select(F.col("node").alias("b"), "label")
@@ -683,10 +705,8 @@ def label_propagation(edges: DataFrame, rounds: int,
             _capture_round_plan("label_propagation round (pre-ckpt)",
                                 new_labels)
         labels = new_labels.localCheckpoint(eager=(r == rounds - 1))
-    if rounds == 0:
-        # no round checkpointed the labels; materialize before the
-        # edge relation releases (pagerank's eager-final discipline)
-        labels = labels.localCheckpoint()
+    # with zero rounds the initial labels are returned: the gate's
+    # materialize already filled their checkpoint
     und.unpersist()
     return labels
 
@@ -777,8 +797,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         # layouts: there the per-round join is the exchange to avoid.)
         e_agg_dst = enc.repartition(spread, "dst").persist()
         e_agg_src = enc.repartition(spread, "src").persist()
-        e_agg_dst.count()
-        e_agg_src.count()
+        materialize(e_agg_dst.unionAll(e_agg_src))  # one job fills both
         e_src = e_dst = None
     else:
         nodes = nodes.repartition(loop_parts, "node").persist()
@@ -788,8 +807,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         # list. Each encodes from the cached e0; no third copy is kept.
         e_src = enc.repartition(loop_parts, "src").persist()
         e_dst = enc.repartition(loop_parts, "dst").persist()
-        e_src.count()
-        e_dst.count()
+        materialize(e_src.unionAll(e_dst))  # one job fills both
     e0.unpersist()
 
     ppm = F.lit(1_000_000).cast("bigint")

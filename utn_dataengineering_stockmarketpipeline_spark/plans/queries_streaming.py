@@ -2,7 +2,12 @@
 
 These run REAL Structured Streaming plans — file source, watermark,
 tumbling window — drained with an ``availableNow`` trigger so the result
-is a bounded DataFrame the driver can compare. The hourly aggregation is
+is a bounded DataFrame the driver can compare. The drained memory sink
+IS the result (the Structured Streaming model: the sink holds the
+query's output once the stream is drained), so a drain returns a frame
+over ``spark.table(name)`` and runs no further job of its own; the
+rows are plain values that no longer depend on the drain's scoped
+confs. The hourly aggregation is
 oracle-checked against the same batch SQL as ``ana_events_hourly``: a
 correct streaming engine must converge to the batch answer once the
 stream is fully drained (complete mode ignores the watermark for
@@ -182,10 +187,7 @@ def q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        # materialize inside the conf scope: the memory sink holds plain
-        # rows, so the returned DataFrame no longer depends on the confs
         out = spark.table(name)
-        out.count()
     return out
 
 
@@ -238,7 +240,6 @@ def q_stream_purchase_error_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         out = spark.table(name)
-        out.count()
     return out
 
 
@@ -281,7 +282,6 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         out = spark.table(name)
-        out.count()
     return out
 
 
@@ -334,7 +334,6 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        out.count()
     return out
 
 
@@ -380,7 +379,6 @@ def q_stream_quota_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("n_dropped").alias("n_dropped"),
             )
         )
-        out.count()
     return out
 
 
@@ -424,7 +422,6 @@ def q_stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
-        out.count()
     return out
 
 
@@ -475,7 +472,6 @@ def q_stream_dedup_within_watermark(spark: SparkSession,
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
-        out.count()
     return out
 
 
@@ -531,7 +527,6 @@ def q_stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         out = spark.table(name)
-        out.count()
     return out
 
 
@@ -592,7 +587,6 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         out = spark.table(name)
-        out.count()
     return out
 
 
@@ -652,7 +646,6 @@ def q_stream_hourly_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("rk", rk)
             .filter(F.col("rk") <= 3)
         )
-        out.count()
     return out
 
 

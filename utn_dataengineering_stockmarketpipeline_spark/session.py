@@ -9,16 +9,20 @@ parallelism at all. Here every knob is set for a real cluster and merely
 - Arrow enabled so the few pandas-UDF operators batch-transfer,
 - nanos-as-long so the driver's TIMESTAMP(NANOS) parquet is readable.
 
-``local_df`` is the one path by which driver-side rows re-enter Spark.
+``local_df`` is the one path by which driver-side rows re-enter Spark,
+and :func:`lossless` the one numeric check every row source applies.
+:func:`materialize` is the one way a frame is computed only to fill its
+cache or checkpoint.
 """
 
 from __future__ import annotations
 
+import numbers
 import os
 from collections.abc import Sequence
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import types as T
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
@@ -61,6 +65,57 @@ def get_spark(app_name: str = "utn-stockmarket-spark") -> SparkSession:
     return spark
 
 
+def lossless(field: T.StructField, value: Any) -> Any:
+    """``value`` as a number of ``field``'s type, or ``TypeError``
+    naming the column when that would lose or invent information.
+
+    Lossless widening is accepted, as the reference's
+    ``pd.DataFrame.from_dict`` accepts it: an int into a double (100 →
+    100.0) and a whole float into an integer (12345.0 → 12345). A
+    fractional float into an integer (Arrow and the Python DataSource
+    would both truncate 1.5 to 1), a bool and a non-number raise.
+    Non-numeric fields and nulls pass through unchanged.
+    """
+    dt = field.dataType
+    if value is None or not isinstance(dt, T.NumericType):
+        return value
+    integral = isinstance(dt, T.IntegralType)
+    if (
+        isinstance(value, bool)
+        or not isinstance(value, numbers.Number)
+        or (integral and isinstance(value, float) and not value.is_integer())
+    ):
+        raise TypeError(
+            f"column {field.name!r}: {value!r} is not a lossless "
+            f"{dt.simpleString()}"
+        )
+    if integral and isinstance(value, float):
+        return int(value)
+    if isinstance(dt, (T.DoubleType, T.FloatType)) and isinstance(value, int):
+        return float(value)
+    return value
+
+
+def materialize(df: DataFrame, **aggs: Column) -> Row:
+    """Run ``df`` once, for its side effects, and return the aggregates
+    ``aggs`` (name → aggregate column) evaluated over its rows.
+
+    The one job fills ``df``'s ``persist()`` or lazy
+    ``localCheckpoint(eager=False)`` (a ``noop`` write scans every
+    row and keeps none) while an ``Observation`` computes the
+    aggregates as the rows stream past. A ``count()`` after a
+    checkpoint, or beside a persist, is a second job over the same
+    rows: under AQE a count alone is two jobs (its partial-aggregate
+    exchange and the final one). Over zero rows a count observes 0 and
+    a sum ``None``.
+    """
+    if aggs:
+        obs = Observation()
+        df = df.observe(obs, *[c.alias(k) for k, c in aggs.items()])
+    df.write.format("noop").mode("overwrite").save()
+    return Row(**obs.get) if aggs else Row()
+
+
 def local_df(
     spark: SparkSession,
     data: Sequence[Sequence[Any]] | Any,
@@ -81,14 +136,11 @@ def local_df(
     driver-side collect (the streaming SCD2 merge loop measured 5.7 →
     2.5 s when its per-batch state stopped costing 6-7 jobs).
 
-    Values convert as the list path converts them, plus lossless
-    widening (an int into a double or decimal, a whole float into an
-    integer: what the reference's ``pd.DataFrame.from_dict`` accepts).
-    Anything else raises ``TypeError`` naming the column: a fractional
-    float into an integer (Arrow alone would truncate it), a bool or a
-    string into a number, a null into a non-nullable field. A naive
-    datetime in a ``TimestampType`` column is local time of this
-    process, as on the list path.
+    Values convert as the list path converts them; numbers go through
+    :func:`lossless`. Anything else raises ``TypeError`` naming the
+    column: a value Arrow cannot convert, a null into a non-nullable
+    field. A naive datetime in a ``TimestampType`` column is local time
+    of this process, as on the list path.
     """
     import datetime
 
@@ -109,16 +161,9 @@ def local_df(
         schema.fields, arrow_schema.types, columns
     ):
         dt = field.dataType
+        if isinstance(values, list) and isinstance(dt, T.NumericType):
+            values = [lossless(field, v) for v in values]
         try:
-            if isinstance(values, list) and isinstance(dt, T.NumericType):
-                integral = isinstance(dt, T.IntegralType)
-                for v in values:
-                    if isinstance(v, bool) or (
-                        integral and isinstance(v, float) and not v.is_integer()
-                    ):
-                        raise TypeError(
-                            f"{v!r} is not a lossless {dt.simpleString()}"
-                        )
             if isinstance(values, list) and isinstance(dt, T.TimestampType):
                 values = [
                     v.astimezone()

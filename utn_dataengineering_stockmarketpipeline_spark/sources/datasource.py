@@ -16,7 +16,11 @@ Fetch modes (options):
   ``eod/{ticker}.US?from=...&fmt=json`` through ``rest.http_fetcher``
   (API_manager.py:51-59,125).
 
-Either way the payload passes the E1 checks of ``rest._check_payload``.
+Either way the payload passes the E1 checks of ``rest._check_payload``,
+and every number passes ``session.lossless``, the rule ``rest.fetch_stock``
+applies: a whole value widens (``"open": 100`` → 100.0, ``"volume":
+12345.0`` → 12345) and a lossy one (``"volume": 1.5``) fails the read,
+naming the column, instead of loading truncated.
 
 Options are plain strings (the DataSource contract), so everything the
 executor needs travels in them — never a pickled closure.
@@ -31,6 +35,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
 from ..schemas import STOCK_RAW, STOCK_RAW_TAGGED
+from ..session import lossless
 from .rest import Fetcher, _check_payload, http_fetcher
 
 
@@ -68,9 +73,10 @@ class StockApiReader(DataSourceReader):
         return [_TickerPartition(t, self.from_date) for t in self.tickers]
 
     def read(self, partition: _TickerPartition) -> Iterator[tuple]:
-        names = STOCK_RAW.fieldNames()
+        fields = STOCK_RAW.fields
         for r in self._fetch(partition.ticker, partition.from_date):
-            yield (partition.ticker, *[r.get(c) for c in names])
+            yield (partition.ticker,
+                   *[lossless(f, r.get(f.name)) for f in fields])
 
     def _fetch(self, ticker: str, from_date: str) -> list[dict]:
         fixture_dir = self.options.get("fixture_dir")

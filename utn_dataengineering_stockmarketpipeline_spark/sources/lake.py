@@ -10,9 +10,12 @@ parquet row-group min/max stats (each file is written sorted by
 (ticker, date) so stat ranges are tight), which is how a columnar lake
 actually indexes at scale.
 
-Compaction: incremental appends accumulate small files; plain parquet
-has no auto-OPTIMIZE, so ``compact`` is the periodic job that rewrites a
-partition into target-sized files (§4.2 "not automatic" row).
+Each ETL cycle's fetch batch is one partition (``rest.json_rows_to_df``),
+so a cycle's append adds one file to each leaf it touches. Compaction:
+those per-cycle files still accumulate, one per cycle per leaf; plain
+parquet has no auto-OPTIMIZE, so ``compact`` is the periodic job that
+rewrites a partition into target-sized files (§4.2 "not automatic"
+row).
 """
 
 from __future__ import annotations

@@ -10,13 +10,19 @@ truncation is guarded by the observed dtype, so it only fires for the
 nanos encoding.
 
 Everything else is a bare ``spark.read.parquet`` so Catalyst keeps full
-pushdown freedom (PushedFilters / ReadSchema reach the scan node).
+pushdown freedom (PushedFilters / ReadSchema reach the scan node). Spark
+infers a parquet schema with a job that reads the file footers; the
+schema of each file is inferred once and handed back to later reads of
+the same file, which then run no job before the query's own.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -30,6 +36,29 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+# (path, mtime_ns, size) -> the schema Spark inferred for that file.
+# mtime and size are in the key so a file rewritten in place, possibly
+# with another schema (events.ts has shipped in two time units), is
+# inferred again instead of read with a stale schema.
+_SCHEMA_CACHE: dict[tuple[str, int, int], T.StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring its schema only on the
+    first read of this version of the file. A path ``os.stat`` cannot
+    see (a remote URI) is read, and inferred, every time."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[key] = df.schema
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -46,7 +75,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer division: `/` would go through double, and nano-epoch
         # values exceed 2^53 — the float round-trip is off by ±1 µs

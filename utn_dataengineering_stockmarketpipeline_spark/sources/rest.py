@@ -9,8 +9,9 @@ ticker on the driver, validates every payload, and returns a single
 frame tagged with ``ticker``; ``fetch_market`` does the same for all
 exchanges. That frame enters Spark through ``session.local_df`` as an
 Arrow-built ``LocalRelation``: the lake write and both stage writes scan
-it without Python-worker tasks. Executor fan-out for large ticker
-universes is the Spark 4 DataSource in ``sources/datasource.py``.
+it without Python-worker tasks. It is one partition, so a cycle writes
+one file into each lake leaf it touches. Executor fan-out for large
+ticker universes is the Spark 4 DataSource in ``sources/datasource.py``.
 """
 
 from __future__ import annotations
@@ -81,11 +82,19 @@ def json_rows_to_df(
     Like ``from_dict``, a whole-number price (``"open": 100``) or volume
     (``"volume": 12345.0``) is accepted; a lossy or wrong-kind value
     (``1.5`` as a volume, ``"7"`` as a price) raises ``TypeError``
-    (both rules are ``session.local_df``'s).
+    (both rules are ``session.lossless``, which the DataSource path
+    applies too).
+
+    A ``LocalRelation`` scans as ``min(rows, cores)`` partitions, and
+    every partition of a lake append writes its own file into each
+    ``(year, month)`` leaf it holds rows of: one row per file for a
+    few tickers' new day. The narrow ``coalesce(1)`` (no shuffle, no
+    extra job) makes it one file per leaf; the rows were fetched in
+    this process, so one task loses no parallelism the fetch had.
     """
     names = [f.name for f in schema.fields]
     prepared = [tuple(r.get(n) for n in names) for r in rows]
-    return local_df(spark, prepared, schema)
+    return local_df(spark, prepared, schema).coalesce(1)
 
 
 def fetch_stock(
