@@ -123,8 +123,9 @@ def test_cycle_job_budget(spark, dbs, tmp_path, spark_jobs):
     """Spark jobs started by one cycle: deterministic where wall time is
     not, so a write path that re-scans what it just wrote fails here.
     Every phase count is observed on its write job, a cycle that staged
-    no stock rows skips the stock commit, and the stock commit is one
-    append with no empty-batch probe."""
+    no stock rows skips the stock commit, the stock commit is one
+    append with no empty-batch probe, and the watermark and the lookup
+    read the newest month as one partition (no exchange)."""
     stage, dw = dbs
     lake_dir = str(tmp_path / "bronze")
 
@@ -138,8 +139,12 @@ def test_cycle_job_budget(spark, dbs, tmp_path, spark_jobs):
     backfill = jobs("2024-01-10")
     new_day = jobs("2024-01-11")  # one new trading day
     idle = jobs("2024-01-11")  # nothing new upstream
-    assert backfill <= 12 and new_day <= 12 and idle <= 8, (
-        backfill, new_day, idle,
+    lookup, rows = spark_jobs(
+        lambda: pipeline.get_last_price(spark, "AAA", dw).collect()
+    )
+    assert len(rows) == 1
+    assert backfill <= 9 and new_day <= 8 and idle <= 6 and lookup <= 2, (
+        backfill, new_day, idle, lookup,
     )
 
 
@@ -255,6 +260,211 @@ def test_empty_inputs_commit_nothing(spark, dbs, tmp_path):
     for table in ("markets", "stock_prices"):
         assert r.fetched[table] == r.staged[table] == r.committed[table] == 0
     assert spark.table(f"{dw}.stock_prices").count() == 0
+
+
+def _bars_on(days):
+    """Fixture API serving ``days[ticker]`` (ISO dates) from ``from``."""
+
+    def fetch(kind, entity, from_date):
+        if kind == "market":
+            return _markets(entity)
+        return [_bar(int(d[-2:]), d) for d in days.get(entity, ())
+                if d >= from_date]
+
+    return fetch
+
+
+def _full_scan(spark, dw, tickers):
+    """``next_from_date`` and ``get_last_price`` computed over every row
+    of the warehouse fact, for comparison with the bounded reads."""
+    from utn_dataengineering_stockmarketpipeline_spark.sources.state import (
+        SENTINEL_DATE,
+    )
+    from pyspark.sql import functions as F
+
+    fact = spark.table(f"{dw}.stock_prices")
+    last = dict(
+        fact.groupBy("stock_ticker").agg(F.max("stock_date")).collect()
+    )
+    bounds = {
+        t: (last[t] + dt.timedelta(days=1)).isoformat() if t in last
+        else SENTINEL_DATE
+        for t in tickers
+    }
+    top = fact.agg(F.max("stock_date")).first()[0]
+    prices = {
+        t: sorted(
+            (r["stock_date"].strftime("%d-%m-%Y"), r["stock_close"])
+            for r in fact.filter((F.col("stock_date") == top)
+                                 & (F.col("stock_ticker") == t)).collect()
+        )
+        for t in tickers
+    }
+    return bounds, prices
+
+
+def _bounded_reads(spark, dw, tickers, monkeypatch):
+    """The bounds, last prices and fact files that the bounded
+    ``next_from_date`` and ``get_last_price`` read."""
+    from utn_dataengineering_stockmarketpipeline_spark.sources import state
+
+    scans, orig = [], state.watermarks
+    monkeypatch.setattr(
+        state, "watermarks", lambda f, *a: scans.append(f) or orig(f, *a)
+    )
+    bounds = state.next_from_date(spark.table(f"{dw}.stock_prices"), tickers)
+    monkeypatch.undo()
+    prices, files = {}, set()
+    for t in tickers:
+        df = pipeline.get_last_price(spark, t, dw)
+        prices[t] = sorted(
+            (r["stock_date_fmt"], r["stock_close"]) for r in df.collect()
+        )
+        files |= {f for f in df.inputFiles() if "/stock_prices/" in f}
+    watermark_files = [
+        {f for f in scan.inputFiles() if "/stock_prices/" in f}
+        for scan in scans
+    ]
+    return bounds, prices, watermark_files, files
+
+
+def _months(files):
+    return {f.split("/stock_prices/")[1].rsplit("/", 1)[0] for f in files}
+
+
+def test_watermark_and_lookup_read_one_month(spark, dbs, tmp_path,
+                                             monkeypatch):
+    """As months are committed, the watermark aggregate and the lookup
+    each read one file of the newest month, and both equal a full
+    scan of the fact."""
+    stage, dw = dbs
+    lake_dir = str(tmp_path / "bronze")
+    tickers = ["AAA", "BBB"]
+    d0 = dt.date(2024, 1, 20)
+    days = [(d0 + dt.timedelta(days=i)).isoformat() for i in range(80)]
+    for up_to, month in (("2024-01-25", 1), ("2024-02-10", 2),
+                         ("2024-03-05", 3), ("2024-04-02", 4)):
+        served = [d for d in days if d <= up_to]
+        pipeline.run_pipeline(
+            spark, _bars_on({t: served for t in tickers}), tickers, ["NYSE"],
+            lake_dir, stage, dw,
+        )
+        bounds, prices, wm_files, lookup_files = _bounded_reads(
+            spark, dw, tickers, monkeypatch,
+        )
+        assert (bounds, prices) == _full_scan(spark, dw, tickers)
+        newest = {f"stock_year=2024/stock_month={month}"}
+        assert len(wm_files) == 1 and len(wm_files[0]) == 1, wm_files
+        assert _months(wm_files[0]) == newest
+        assert len(lookup_files) == 1 and _months(lookup_files) == newest
+
+
+def test_ticker_absent_from_newest_month_falls_back(spark, dbs, tmp_path,
+                                                    monkeypatch):
+    """A ticker with no row in the newest month takes the aggregate
+    over the older months: its bound equals a full scan's. The lookup
+    keeps the reference's global-max-date rule, so that ticker has no
+    last price, as in a full scan."""
+    stage, dw = dbs
+    tickers = ["AAA", "BBB", "CCC"]
+    fetch = _bars_on({"AAA": ["2024-01-05", "2024-02-03"],
+                      "BBB": ["2024-01-04", "2024-01-09"]})
+    pipeline.run_pipeline(spark, fetch, tickers, ["NYSE"],
+                          str(tmp_path / "bronze"), stage, dw)
+    bounds, prices, wm_files, _ = _bounded_reads(spark, dw, tickers,
+                                                 monkeypatch)
+    assert (bounds, prices) == _full_scan(spark, dw, tickers)
+    assert bounds["BBB"] == "2024-01-10" and not prices["BBB"]
+    # the newest month, then the older ones for BBB and CCC
+    assert [_months(f) for f in wm_files] == [
+        {"stock_year=2024/stock_month=2"}, {"stock_year=2024/stock_month=1"},
+    ]
+
+
+def test_truncated_newest_month_then_older_commit(spark, dbs, tmp_path,
+                                                  monkeypatch):
+    """``TRUNCATE`` of the newest partition leaves it listed by
+    ``SHOW PARTITIONS`` but without files, so the bounded reads pick
+    the newest partition that holds a file. After a commit to an older
+    month both equal a full scan."""
+    stage, dw = dbs
+    lake_dir = str(tmp_path / "bronze")
+    tickers = ["AAA", "BBB"]
+
+    def cycle(served):
+        pipeline.run_pipeline(
+            spark, _bars_on({t: served for t in tickers}), tickers, ["NYSE"],
+            lake_dir, stage, dw,
+        )
+
+    cycle(["2024-01-10", "2024-01-11", "2024-02-05"])
+    spark.sql(f"TRUNCATE TABLE {dw}.stock_prices "
+              "PARTITION (stock_year = 2024, stock_month = 2)")
+    listed = {r[0] for r in spark.sql(f"SHOW PARTITIONS {dw}.stock_prices")
+              .collect()}
+    assert "stock_year=2024/stock_month=2" in listed
+    cycle(["2024-01-10", "2024-01-11", "2024-01-12"])  # January only
+    bounds, prices, wm_files, lookup_files = _bounded_reads(
+        spark, dw, tickers, monkeypatch,
+    )
+    assert (bounds, prices) == _full_scan(spark, dw, tickers)
+    assert bounds == {"AAA": "2024-01-13", "BBB": "2024-01-13"}
+    assert prices["AAA"] == [("12-01-2024", 13.5)]
+    assert _months(lookup_files) == {"stock_year=2024/stock_month=1"}
+    assert len(wm_files) == 1
+
+
+def test_empty_newer_month(spark, dbs, tmp_path, monkeypatch):
+    """The bounded reads trust that a partition holding a file holds
+    rows. A static-partition ``INSERT OVERWRITE`` of an empty select
+    registers a month newer than any row but writes no file into it,
+    so both reads keep to the newest month with rows and equal a full
+    scan. A zero-row file that another writer puts into that month
+    breaks the rule: the month is chosen, no ticker has a row in it, and
+    the watermark takes its fallback over the older months for every
+    ticker, still equal to a full scan. (The lookup has no fallback;
+    its docstring states the rule it depends on.)"""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stage, dw = dbs
+    tickers = ["AAA", "BBB"]
+    served = ["2024-01-10", "2024-02-05", "2024-02-06"]
+    pipeline.run_pipeline(
+        spark, _bars_on({t: served for t in tickers}), tickers, ["NYSE"],
+        str(tmp_path / "bronze"), stage, dw,
+    )
+    fact = spark.table(f"{dw}.stock_prices")
+    cols = ", ".join(c for c in fact.columns
+                     if c not in ("stock_year", "stock_month"))
+    spark.sql(f"INSERT OVERWRITE TABLE {dw}.stock_prices "
+              "PARTITION (stock_year = 2024, stock_month = 3) "
+              f"SELECT {cols} FROM {stage}.stock_prices WHERE false")
+    listed = {r[0] for r in spark.sql(f"SHOW PARTITIONS {dw}.stock_prices")
+              .collect()}
+    jan, feb, mar = (f"stock_year=2024/stock_month={m}" for m in (1, 2, 3))
+    assert mar in listed
+    assert _months(spark.table(f"{dw}.stock_prices").inputFiles()) == {
+        jan, feb,
+    }
+    bounds, prices, wm_files, lookup_files = _bounded_reads(
+        spark, dw, tickers, monkeypatch,
+    )
+    assert (bounds, prices) == _full_scan(spark, dw, tickers)
+    assert bounds == {"AAA": "2024-02-07", "BBB": "2024-02-07"}
+    assert prices["AAA"] == [("06-02-2024", 7.5)]
+    assert [_months(f) for f in wm_files] == [{feb}]
+    assert _months(lookup_files) == {feb}
+
+    pq.write_table(pa.table({"stock_ticker": pa.array([], pa.string())}),
+                   _table_dir(spark, dw, "stock_prices") / mar
+                   / "part-empty.parquet")
+    spark.sql(f"REFRESH TABLE {dw}.stock_prices")
+    bounds, _, wm_files, _ = _bounded_reads(spark, dw, tickers, monkeypatch)
+    assert bounds == _full_scan(spark, dw, tickers)[0]
+    assert bounds == {"AAA": "2024-02-07", "BBB": "2024-02-07"}
+    # the empty newest month, then every older month for both tickers
+    assert [_months(f) for f in wm_files] == [{mar}, {jan, feb}]
 
 
 def test_corpus_release_end_to_end(spark, tmp_path):

@@ -667,3 +667,29 @@ def test_quarantine_sink_replay_is_idempotent(spark, events_split, tmp_path):
     n_clean = spark.read.parquet(clean_dir).count()
     n_bad = spark.read.parquet(q_dir).count()
     assert n_clean + n_bad == n_src
+
+
+@pytest.mark.parametrize("name", ["stream_events_hourly", "stream_dedup_events"])
+def test_drains_leave_no_sink_view(spark, name):
+    """A catalog drain returns its memory sink's rows and drops the
+    sink's temp view, so repeated builds hold no drained rows in the
+    session: three builds leave no ``stream_*`` view and no active
+    query, and each returns the same rows (``stream_dedup_events``
+    aggregates the sink after the drop)."""
+    from utn_dataengineering_stockmarketpipeline_spark.plans.catalog import (
+        CATALOG,
+    )
+
+    def views():
+        return {t.name for t in spark.catalog.listTables()
+                if t.isTemporary and t.name.startswith("stream_")}
+
+    before = views()
+    results = []
+    for _ in range(3):
+        rows = CATALOG[name].build(spark, SF_SMOKE).collect()
+        results.append(sorted(tuple(r) for r in rows))
+        assert views() == before
+        assert not spark.streams.active
+    assert results[0] and results[0] == results[1] == results[2]
+

@@ -14,7 +14,10 @@ first with the ``prune`` predicate, and let AQE pick broadcast when the
 pruned side is small. The warehouse commit
 (``operators/warehouse.commit_to_warehouse``) does this: its keys embed
 the date, so only year/month partitions at or after the batch's
-earliest one can hold a colliding key.
+earliest one can hold a colliding key. It also passes its stage as one
+partition: ``dropDuplicates`` over a single partition needs no
+exchange, which suits a batch that came from the driver. A batch too
+large for one task should arrive with its own partitioning instead.
 """
 
 from __future__ import annotations

@@ -19,12 +19,14 @@ The SCD-0 commit costs the batch, not the history. The stage write
 observes the batch's lowest (year, month) beside its row count, and the
 commit's anti-join reads only warehouse partitions at or after it. That
 is exact: ``stock_key`` is ``date/ticker``, so two rows with one key
-share a partition.
+share a partition. The commit reads the stage as one partition: it holds
+one batch, which entered Spark from the driver as one partition, so its
+``dropDuplicates`` needs no exchange.
 
 Empty appends: an append to a partitioned table opens a file only when
 a row arrives, so a commit of 0 new rows writes nothing. An append to an
-unpartitioned table writes an empty parquet file even for 0 rows, so its
-commit probes ``isEmpty()`` first and skips the append.
+unpartitioned table writes an empty parquet file even for 0 rows, so a
+``markets`` commit probes ``isEmpty()`` first and skips the append.
 
 At scale: managed tables here are plain parquet; a production
 deployment swaps in a transactional format for concurrent writers —
@@ -151,7 +153,8 @@ def pending_rows(spark: SparkSession, table: str, since: Row | None = None,
     """Stage rows whose key is absent from the warehouse, in storage
     order: what :func:`commit_to_warehouse` appends. A ``since``
     partition tuple limits the warehouse scan to partitions at or after
-    it; ``None`` scans the whole table."""
+    it; ``None`` scans the whole table. The stage is read as one
+    partition (one batch), so deduplicating it needs no exchange."""
     _, key, parts = _TABLES[table]
     prune = None
     if since is not None:
@@ -160,7 +163,7 @@ def pending_rows(spark: SparkSession, table: str, since: Row | None = None,
     # re-align: the USING-key anti-join moves the key column first and
     # insertInto maps by POSITION, not name.
     return new_rows(
-        spark.table(f"`{stage}`.`{table}`"),
+        spark.table(f"`{stage}`.`{table}`").coalesce(1),
         spark.table(f"`{warehouse}`.`{table}`"),
         key,
         prune,

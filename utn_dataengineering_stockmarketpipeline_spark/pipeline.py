@@ -18,6 +18,19 @@ bronze parquet → stage → SCD-0 warehouse commit; then the
   skips it;
 - counts come from the write jobs; no post-write re-scan.
 
+The fact reads of a daily cycle are bounded. The stage write and the
+commit read the batch, which came from the driver as one partition.
+The commit's anti-join reads the warehouse from the batch's month on.
+The watermark and the lookup read the newest ``(stock_year,
+stock_month)`` partition holding a file, as one partition, so neither
+needs an exchange. The watermark's bound holds only for tickers with a
+row in the newest month. A requested ticker absent from it (not yet
+loaded, or no longer trading) sends the watermark to a distributed
+aggregate over every older month, on every cycle it stays absent. The
+symbol list is a full snapshot, staged and committed every cycle. On
+the e2e fixture a new-day cycle runs 8 Spark jobs, an idle one 6, and
+a lookup 2.
+
 Everything is injected (fetcher, paths, databases) so the same function
 runs in tests against local JSON fixtures and in production against the
 real API — the reference hard-codes all of it.
@@ -27,14 +40,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import warehouse as wh
 from .operators.transforms import normalize_market_payload, normalize_stock_payload
 from .sources import lake
 from .sources.rest import Fetcher, fetch_market, fetch_stock
-from .sources.state import next_from_date
+from .sources.state import newest_partition, next_from_date
 
 
 @dataclass
@@ -90,18 +103,31 @@ def get_last_price(
     spark: SparkSession, ticker: str, warehouse: str = wh.WAREHOUSE
 ) -> DataFrame:
     """The reference's analytical query over the live warehouse
-    (``DB_manager.py:181-199``), global-max-date quirk included."""
+    (``DB_manager.py:181-199``), global-max-date quirk included.
+
+    The global max date lies in the newest partition holding a file
+    (the partition columns are parts of the date), so only that
+    partition is read, as one partition, and ``max(stock_date) over ()``
+    needs no exchange: one job, plus the ``markets`` broadcast. An empty
+    warehouse has no such partition and reads the (empty) table. The
+    lookup trusts ``state.newest_partition``'s rule that a partition
+    holding a file holds rows, which every Spark write to the table
+    keeps. An empty file put there by another writer would make it
+    return no row where a full scan returns the previous month's."""
     from .functions.scalar import fmt_ddmmyyyy
 
     fact = spark.table(f"`{warehouse}`.`stock_prices`")
     dim = spark.table(f"`{warehouse}`.`markets`")
-    latest = fact.select(F.max("stock_date").alias("__d"))
+    newest = newest_partition(fact)
+    month = (fact if newest is None else fact.filter(newest)).coalesce(1)
+    latest = month.withColumn(
+        "__d", F.max("stock_date").over(Window.partitionBy())
+    ).filter(F.col("stock_date") == F.col("__d"))
     return (
-        fact.join(F.broadcast(latest), fact.stock_date == F.col("__d"))
-        .filter(F.col("stock_ticker") == ticker)
+        latest.filter(F.col("stock_ticker") == ticker)
         .join(
             F.broadcast(dim),
-            fact.stock_ticker == dim.market_stockid,
+            latest.stock_ticker == dim.market_stockid,
             "left",
         )
         .select(

@@ -5,10 +5,10 @@ tumbling window — drained with an ``availableNow`` trigger so the result
 is a bounded DataFrame the driver can compare. The drained memory sink
 IS the result (the Structured Streaming model: the sink holds the
 query's output once the stream is drained), so a drain returns a frame
-over ``spark.table(name)`` and runs no further job of its own; the
+over the sink (``_drain``) and runs no further job of its own; the
 rows are plain values that no longer depend on the drain's scoped
-confs. The hourly aggregation is
-oracle-checked against the same batch SQL as ``ana_events_hourly``: a
+confs, and the sink's temp view is dropped once the frame is resolved.
+The hourly aggregation is oracle-checked against the same batch SQL as ``ana_events_hourly``: a
 correct streaming engine must converge to the batch answer once the
 stream is fully drained (complete mode ignores the watermark for
 emission, so no windows are withheld).
@@ -144,6 +144,29 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _drain(stream: DataFrame, prefix: str, output_mode: str) -> DataFrame:
+    """Drain ``stream`` with an ``availableNow`` trigger into a memory
+    sink named ``prefix`` + a fresh id, and return the sink's rows.
+
+    The frame is resolved before the sink's temp view is dropped: it
+    keeps reading the drained rows, and no build leaves a view (and
+    the rows it holds) behind in the session. Call it inside the
+    drain's conf scope."""
+    spark = stream.sparkSession
+    name = prefix + uuid.uuid4().hex[:12]
+    (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
 @register(
     "stream_events_hourly",
     """
@@ -160,7 +183,6 @@ GROUP BY 1, 2
     tags=("streaming", "window", "events"),
 )
 def q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name = "stream_hourly_" + uuid.uuid4().hex[:12]
     with _streaming_events_conf(spark):
         raw = _events_stream(spark, sf_dir)
         agg = (
@@ -179,15 +201,7 @@ def q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_value",
             )
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table(name)
+        out = _drain(agg, "stream_hourly_", "complete")
     return out
 
 
@@ -212,7 +226,6 @@ FROM p JOIN er ON p.user_id = er.user_id
 def q_stream_purchase_error_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ingest import stream_stream_join
 
-    name = "stream_ssj_" + uuid.uuid4().hex[:12]
     with _streaming_events_conf(spark):
         raw = _events_stream(spark, sf_dir)
 
@@ -231,15 +244,7 @@ def q_stream_purchase_error_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             right_ts="e_ts",
         ).select(F.col("l.user_id").alias("user_id"), "p_id", "e_id")
 
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table(name)
+        out = _drain(joined, "stream_ssj_", "append")
     return out
 
 
@@ -261,7 +266,6 @@ GROUP BY n.n_name, e.event_type
 def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.parquet import load_table
 
-    name = "stream_enrich_" + uuid.uuid4().hex[:12]
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", F.col("n_name").alias("nation")
     )
@@ -273,15 +277,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = enriched.groupBy("nation", "event_type").agg(
             F.count(F.lit(1)).alias("n_events")
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table(name)
+        out = _drain(agg, "stream_enrich_", "complete")
     return out
 
 
@@ -305,7 +301,6 @@ FROM events GROUP BY 1
 def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ingest import stateful_running_totals
 
-    name = "stream_totals_" + uuid.uuid4().hex[:12]
     with _streaming_events_conf(spark):
         # key on a mod-8 user cohort: few enough keys that the
         # oracle output is readable, many enough to exercise
@@ -314,19 +309,11 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("user_id") % 8).alias("cohort"), "value"
         )
         totals = stateful_running_totals(raw, "cohort", "value")
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drained = _drain(totals, "stream_totals_", "update")
         # update mode emits one row per key per micro-batch; the final
         # state per key is the row with the largest running count
         out = (
-            spark.table(name)
-            .groupBy("group_key")
+            drained.groupBy("group_key")
             .agg(
                 F.max("n_events").alias("n_events"),
                 F.round(F.max_by("total_value", "n_events"), 2).alias(
@@ -357,23 +344,14 @@ FROM events GROUP BY user_id
 def q_stream_quota_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ingest import stateful_quota_admission
 
-    name = "stream_quota_" + uuid.uuid4().hex[:12]
     with _streaming_events_conf(spark):
         raw = _events_stream(spark, sf_dir).select("user_id")
         quota = stateful_quota_admission(raw, "user_id", k=5)
-        q = (
-            quota.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drained = _drain(quota, "stream_quota_", "update")
         # update mode: one row per key per micro-batch; both outputs
         # are monotone, so the final state is the per-key max
         out = (
-            spark.table(name)
-            .groupBy("user_id")
+            drained.groupBy("user_id")
             .agg(
                 F.max("n_admitted").alias("n_admitted"),
                 F.max("n_dropped").alias("n_dropped"),
@@ -398,7 +376,6 @@ FROM events GROUP BY event_type
     tags=("streaming", "dedup", "exactly-once"),
 )
 def q_stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name = "stream_dedup_" + uuid.uuid4().hex[:12]
     with _streaming_events_conf(spark):
         def one_stream() -> DataFrame:
             return _events_stream(spark, sf_dir).select(
@@ -409,17 +386,9 @@ def q_stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped = doubled.withWatermark("ts", "10 minutes").dropDuplicates(
             ["event_id", "ts"]
         )
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drained = _drain(deduped, "stream_dedup_", "append")
         out = (
-            spark.table(name)
-            .groupBy("event_type")
+            drained.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
     return out
@@ -448,7 +417,6 @@ FROM events GROUP BY event_type
 )
 def q_stream_dedup_within_watermark(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
-    name = "stream_ddww_" + uuid.uuid4().hex[:12]
     with _streaming_events_conf(spark):
         def one_stream() -> DataFrame:
             return _events_stream(spark, sf_dir).select(
@@ -459,17 +427,9 @@ def q_stream_dedup_within_watermark(spark: SparkSession,
         deduped = doubled.withWatermark(
             "ts", "10 minutes"
         ).dropDuplicatesWithinWatermark(["event_id"])
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drained = _drain(deduped, "stream_ddww_", "append")
         out = (
-            spark.table(name)
-            .groupBy("event_type")
+            drained.groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
     return out
@@ -502,7 +462,6 @@ FROM s GROUP BY user_id, sid
     tags=("streaming", "session", "stateful", "events"),
 )
 def q_stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name = "stream_sess_" + uuid.uuid4().hex[:12]
     with _streaming_events_conf(spark):
         raw = _events_stream(spark, sf_dir)
         sess = (
@@ -518,15 +477,7 @@ def q_stream_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
             )
         )
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table(name)
+        out = _drain(sess, "stream_sess_", "complete")
     return out
 
 
@@ -556,7 +507,6 @@ FROM slots GROUP BY 1, 2
     tags=("streaming", "window", "sliding", "events"),
 )
 def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name = "stream_slide_" + uuid.uuid4().hex[:12]
     with _streaming_events_conf(spark):
         raw = _events_stream(spark, sf_dir)
         agg = (
@@ -578,15 +528,7 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_value",
             )
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table(name)
+        out = _drain(agg, "stream_slide_", "complete")
     return out
 
 
@@ -613,7 +555,6 @@ SELECT window_start, event_type, n_events, rk FROM r WHERE rk <= 3
     tags=("streaming", "window", "topk"),
 )
 def q_stream_hourly_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    name = "stream_topk_" + uuid.uuid4().hex[:12]
     with _streaming_events_conf(spark):
         raw = _events_stream(spark, sf_dir)
         agg = (
@@ -626,14 +567,7 @@ def q_stream_hourly_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_events",
             )
         )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drained = _drain(agg, "stream_topk_", "complete")
         from pyspark.sql import Window as W
 
         rk = F.row_number().over(
@@ -642,8 +576,7 @@ def q_stream_hourly_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out = (
-            spark.table(name)
-            .withColumn("rk", rk)
+            drained.withColumn("rk", rk)
             .filter(F.col("rk") <= 3)
         )
     return out
